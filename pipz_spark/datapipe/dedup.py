@@ -17,12 +17,12 @@ from __future__ import annotations
 
 import pandas as pd
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from .graph import connected_components
 
-from ..core.errors import ERROR_COL, ensure_error_column, is_ok, null_error
+from ..core.errors import ERROR_COL, ensure_error_column, is_ok
 from .text import WS
 from ..core.step import Step
 
@@ -35,45 +35,43 @@ def exact_dedup(
     id_col: str = "doc_id",
     normalize: bool = True,
 ) -> Step:
-    """Exact deduplication via content-hash group-by; keeps the row
-    with the smallest id per content key (deterministic, unlike
-    ``dropDuplicates``). Map-side partial aggregation means only one
-    (hash → min id) pair per key per partition crosses the shuffle.
+    """Exact deduplication in one window pass: per content key, the
+    smallest id among the ok rows is elected keeper (deterministic,
+    unlike ``dropDuplicates``) and every other ok row of the key is
+    dropped. One exchange, no self-join: the keyed frame is read once,
+    so everything upstream of it (scan, Python UDFs) runs once.
 
     Errored rows are exempt from dedup and PASS THROUGH unchanged (the
     schema is row-identity-preserving), so upstream dead letters still
-    reach the sink — fail-fast skips a row, it never deletes it."""
+    reach the sink — fail-fast skips a row, it never deletes it. They
+    never take part in electing a keeper, and each sits in a window
+    partition of its own id rather than all in one."""
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
         df = ensure_error_column(df)
-        failed = df.where(~is_ok())
-        ok = df.where(is_ok()).drop(ERROR_COL)
         text = F.col(text_col)
         key = F.md5(F.regexp_replace(F.lower(text), WS, " ")) if normalize else F.md5(text)
-        # NULL text → NULL md5 would never match itself in the equi-
-        # join and the row would silently vanish; coalesce to a
-        # sentinel so NULL-text rows form one dedup group (matching
-        # SQL GROUP BY, which groups NULLs together)
+        # NULL text → NULL md5; coalesce to a sentinel so NULL-text
+        # rows form one dedup group (matching SQL GROUP BY, which
+        # groups NULLs together)
         key = F.coalesce(key, F.lit("__pipz_null__"))
-        keyed = ok.withColumn("_pipz_key", key)
-        keep = keyed.groupBy("_pipz_key").agg(F.min(id_col).alias("_pipz_keep_id"))
+        ok = is_ok()
+        ident = F.col(id_col)
+        # ok rows partition by (key, NULL), failed rows by (NULL, id):
+        # the key is never NULL, so the two never share a partition
+        w = Window.partitionBy(F.when(ok, key), F.when(~ok, ident))
+        keep_id = F.min(F.when(ok, ident)).over(w)
         # NULL-SAFE id equality (r7 review finding): min() skips NULL
         # ids, so a group whose ids are ALL NULL gets keeper id NULL —
-        # a null-rejecting equi-join deleted the whole group (unique
-        # content, silently gone). With <=> an all-NULL-id group keeps
-        # its rows (no id exists to elect one keeper by — documented);
-        # a mixed group still drops its NULL-id rows as duplicates of
-        # the non-NULL keeper, which IS dedup behavior.
-        out = (
-            keyed.join(
-                keep,
-                (keyed["_pipz_key"] == keep["_pipz_key"])
-                & keyed[id_col].eqNullSafe(keep["_pipz_keep_id"]),
-                "left_semi",
-            )
-            .drop("_pipz_key")
+        # with <=> it keeps its rows (no id exists to elect one keeper
+        # by — documented); a mixed group still drops its NULL-id rows
+        # as duplicates of the non-NULL keeper, which IS dedup behavior.
+        cols = [c for c in df.columns if c != ERROR_COL]
+        return (
+            df.withColumn("_pipz_keep_id", keep_id)
+            .where(~ok | ident.eqNullSafe(F.col("_pipz_keep_id")))
+            .select(*cols, ERROR_COL)
         )
-        return out.withColumn(ERROR_COL, null_error()).unionByName(failed)
 
     return Step(name, fn, node_type="exact_dedup")
 

@@ -83,14 +83,22 @@ def python_apply(
         ]
     )
 
-    def batch_fn(*cols):  # pd.Series in, pd.DataFrame out
+    def batch_fn(live, *cols):  # pd.Series in, pd.DataFrame out
+        # ``live`` is is_ok() per row: a row dead-lettered upstream
+        # never reaches fn (nor its deadline) and comes back all-NULL
         import pandas as pd
 
         values: list[Any] = []
         errs: list[str | None] = []
         tos: list[bool] = []
+        rows = zip(live, zip(*cols))
         if timeout_seconds is None:
-            for row in zip(*cols):
+            for ok, row in rows:
+                if not ok:
+                    values.append(None)
+                    errs.append(None)
+                    tos.append(False)
+                    continue
                 try:
                     values.append(fn(*row))
                     errs.append(None)
@@ -104,7 +112,12 @@ def python_apply(
 
         ex = ThreadPoolExecutor(max_workers=1)
         try:
-            for row in zip(*cols):
+            for ok, row in rows:
+                if not ok:
+                    values.append(None)
+                    errs.append(None)
+                    tos.append(False)
+                    continue
                 timed = False
                 try:
                     values.append(ex.submit(fn, *row).result(timeout=timeout_seconds))
@@ -134,35 +147,29 @@ def python_apply(
     tmp = f"_pipz_udf_{name}_{_uuid.uuid4().hex[:8]}"
 
     def step_fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        # OK/FAILED split instead of when(is_ok(), udf): Catalyst
-        # extracts Python UDFs out of conditionals into an
-        # ArrowEvalPython node evaluated for EVERY row, so the old
-        # form ran fn (and burned the per-value deadline, serially)
-        # on rows already dead-lettered upstream (r7 review finding).
-        # The split also preserves a pre-existing output column's
-        # value on errored rows — they skipped the step (the Apply
+        # One projection over every row, never an OK/FAILED split
+        # unioned back: each branch of a split re-derives its whole
+        # lineage from the scan, so every upstream Python UDF ran once
+        # per branch. Rows already dead-lettered ride through the
+        # Arrow batch but are masked off inside it (``live``), so fn
+        # (and its deadline) never runs on them, and they keep their
+        # upstream error and their pre-step output value (the Apply
         # keeps-pre-step-values divergence, DIVERGENCES #3).
         df = ensure_error_column(df)
-        ok = df.where(is_ok())
-        failed = df.where(~is_ok())
-        res = wrapped(*[F.col(c) for c in inputs])
-        ok = ok.withColumn(tmp, res)
-        err_msg = F.col(tmp)["err"]
-        ok = ok.withColumn(
-            ERROR_COL,
-            F.when(
-                err_msg.isNotNull(),
-                make_error(
-                    list(path),
-                    err_msg,
-                    timeout=F.coalesce(F.col(tmp)["timed_out"], F.lit(False)),
-                ),
-            ).otherwise(F.col(ERROR_COL)),
-        )
-        ok = ok.withColumn(out_col, F.col(tmp)["value"]).drop(tmp)
-        if out_col not in df.columns:
-            failed = failed.withColumn(out_col, F.lit(None).cast(ret_type))
-        return ok.unionByName(failed)
+        df = df.withColumn(tmp, wrapped(is_ok(), *[F.col(c) for c in inputs]))
+        res = F.col(tmp)
+        value = res["value"]
+        if out_col in df.columns:
+            value = F.when(is_ok(), value).otherwise(F.col(out_col))
+        err = F.when(
+            res["err"].isNotNull(),
+            make_error(
+                list(path),
+                res["err"],
+                timeout=F.coalesce(res["timed_out"], F.lit(False)),
+            ),
+        ).otherwise(F.col(ERROR_COL))
+        return df.withColumns({ERROR_COL: err, out_col: value}).drop(tmp)
 
     return Step(name, step_fn, node_type="python_apply", metadata={"inputs": inputs})
 
@@ -192,8 +199,10 @@ def python_flat_map(
     Implementation note: the error ride-along is a sentinel column
     INSIDE the UDTF output (success rows carry NULL), because a
     lateral join drops zero-output rows — an erroring row must still
-    produce its dead-letter carrier. Errored INPUT rows bypass the
-    lateral entirely and pass through unexpanded."""
+    produce its dead-letter carrier. Errored INPUT rows enter the
+    lateral masked off (an ``is_ok()`` argument): they skip fn and
+    yield one all-NULL row whose NULL sentinel keeps their upstream
+    error, so they pass through unexpanded without a second branch."""
     from pyspark.sql.functions import udtf as _udtf
 
     out_schema = T.StructType.fromDDL(returns)
@@ -221,7 +230,10 @@ def python_flat_map(
     n_out = len(out_schema.fields)
 
     class _FlatMap:
-        def eval(self, *args):
+        def eval(self, live, *args):
+            if not live:
+                yield (None,) * (n_out + 1)
+                return
             # BUFFER the full expansion before yielding anything: a
             # generator fn that raises mid-iteration must not leak its
             # already-produced prefix as OK rows next to the dead
@@ -270,26 +282,17 @@ def python_flat_map(
                 "field (dropping the column via keep= is not enough — "
                 "the lateral join still carries it)"
             )
-        ok = df.where(is_ok())
-        failed = df.where(~is_ok())
-        expanded = ok.lateralJoin(gen(*[F.col(c).outer() for c in inputs]))
+        expanded = df.lateralJoin(
+            gen(is_ok().outer(), *[F.col(c).outer() for c in inputs])
+        )
         err_msg = F.col("_pz_err")
-        expanded = expanded.select(
+        return expanded.select(
             *carried,
             *[f.name for f in out_schema.fields],
             F.when(
                 err_msg.isNotNull(), make_error(list(path), err_msg)
             ).otherwise(F.col(ERROR_COL)).alias(ERROR_COL),
         )
-        passthrough = failed.select(
-            *carried,
-            *[
-                F.lit(None).cast(f.dataType).alias(f.name)
-                for f in out_schema.fields
-            ],
-            F.col(ERROR_COL),
-        )
-        return expanded.unionByName(passthrough)
 
     return Step(name, step_fn, node_type="python_flat_map", metadata={"inputs": inputs})
 

@@ -46,6 +46,19 @@ def get_session(
         # Arrow for the pandas-UDF escape hatch (the slow path, but
         # batched, never row-at-a-time).
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
+        # Compiled whole-stage classes live in an LRU of 100 entries by
+        # default; one corpus cleaning + near-dup + cluster pass needs
+        # ~110-130, so a repeated pass evicted each class before its
+        # reuse and recompiled everything (Janino + JIT CPU every pass).
+        # 1000 holds several such pipelines; an entry is one loaded class.
+        .config("spark.sql.codegen.cache.maxEntries", "1000")
+        # The cache key is the generated source, and by default the
+        # class name carries the codegen stage id. Stage numbering is
+        # not stable between runs of one query under AQE (the near-dup
+        # pass now and then swaps two ids), so an unchanged stage came
+        # back under a new name and compiled again; without the id,
+        # identical stages share one class.
+        .config("spark.sql.codegen.useIdInClassName", "false")
         # Dimension tables in this schema are tiny; keep the default
         # 10 MB threshold but make the intent explicit.
         .config("spark.sql.autoBroadcastJoinThreshold", 10 * 1024 * 1024)

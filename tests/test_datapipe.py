@@ -76,6 +76,61 @@ def test_exact_dedup_keeps_min_id(spark, documents):
     assert all(r["doc_id"] < 100000 for r in kept)
 
 
+def test_exact_dedup_passes_dead_letters_and_never_elects_them(spark, documents):
+    # upstream dead letters pass through untouched (duplicates among
+    # them included) and never elect a keeper, even with a smaller id
+    # than the ok rows sharing their text; the ok side and the schema
+    # are those of the groupBy-min + semi-join form this replaced
+    from collections import Counter
+
+    from pipz_spark import ERROR_COL, P, split_failed
+    from pipz_spark.core.errors import ensure_error_column
+    from pipz_spark.datapipe.text import WS
+
+    base = documents.select("doc_id", "text")
+    dups = base.limit(20)
+    frame = (
+        base.unionByName(dups.withColumn("doc_id", F.col("doc_id") + 100000))
+        .unionByName(dups.withColumn("doc_id", -F.col("doc_id") - 1))
+        .unionByName(dups.limit(5).withColumn("doc_id", -F.col("doc_id") - 1))
+    )
+    gate = P.apply("gate", error_when=F.col("doc_id") < 0, message="quarantined")
+    # a column after the error column: the output moves the error last
+    tainted = gate(ensure_error_column(frame)).withColumn("n", F.length("text"))
+    out = exact_dedup()(tainted)
+    err_type = tainted.schema[ERROR_COL].dataType.simpleString()
+    assert out.dtypes == [
+        ("doc_id", "bigint"), ("text", "string"), ("n", "int"), (ERROR_COL, err_type)
+    ]
+
+    def bag(df):
+        return Counter(repr(r) for r in df.collect())
+
+    failed_in = split_failed(tainted).select(*out.columns)
+    assert bag(split_failed(out)) == bag(failed_in)
+    assert split_failed(out).count() == 25
+
+    ok_in = split_ok(tainted).withColumn(
+        "_k", F.md5(F.regexp_replace(F.lower("text"), WS, " "))
+    )
+    keep = ok_in.groupBy("_k").agg(F.min("doc_id").alias("_keep"))
+    expected = ok_in.join(
+        keep, (ok_in["_k"] == keep["_k"]) & (ok_in["doc_id"] == keep["_keep"]), "left_semi"
+    ).drop("_k")
+    ok_out = split_ok(out)
+    assert ok_out.columns == expected.columns
+    assert bag(ok_out) == bag(expected)
+    assert ok_out.where(F.col("doc_id") < 0).count() == 0
+
+    # the smallest case: failed id -1 shares its text with ok ids 2, 3
+    tiny = gate(ensure_error_column(spark.createDataFrame(
+        [(-1, "a"), (2, "a"), (3, "a"), (-1, "a")], "doc_id int, text string"
+    )))
+    res = exact_dedup()(tiny)
+    assert [tuple(r) for r in split_ok(res).collect()] == [(2, "a")]
+    assert sorted(r["doc_id"] for r in split_failed(res).collect()) == [-1, -1]
+
+
 def test_minhash_near_dup_finds_planted_pair(spark, documents):
     # plant a near-duplicate: copy a doc and tweak the tail
     base = documents.limit(1).collect()[0]
@@ -4937,3 +4992,39 @@ def test_common_neighbor_pairs_matches_replay(spark):
         common_neighbor_pairs(df, min_common=0)
     with _pytest.raises(ValueError):
         common_neighbor_pairs(df, max_degree=0)
+
+
+def test_repeated_corpus_pass_compiles_no_new_classes(spark, documents, tmp_path):
+    # a corpus cleaning + near-dup + cluster pass generates ~110-130
+    # whole-stage classes; with Spark's default 100-entry codegen
+    # cache a repeated pass evicted each before its reuse and
+    # recompiled all of them. The session's cache holds the whole pass,
+    # and class names carry no stage id, so a stage AQE renumbers
+    # between passes still finds its class.
+    from pipz_spark import P
+    from pipz_spark.datapipe import dedup_clusters
+    from pipz_spark.functions import python_apply
+    from pipz_spark.sources import write_split
+
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+
+    def run(out):
+        gate = P.apply("gate", error_when=F.col("n_tokens") < 5, message="short")
+        normalize = python_apply(
+            "normalize", lambda t: " ".join(t.split()), ["text"], "string", output="text_norm"
+        )
+        clean = P.sequence(
+            "clean", token_count(), quality_score(), gate, lang_id(), normalize,
+            exact_dedup(text_col="text_norm"),
+        )
+        write_split(clean(documents).drop("text"), str(out / "ok"), str(out / "dead"))
+        survivors = spark.read.parquet(str(out / "ok"))
+        pairs = near_dup_pairs(survivors, text_col="text_norm").persist()
+        pairs.count()
+        dedup_clusters(survivors, pairs).write.parquet(str(out / "clusters"))
+        pairs.unpersist()
+
+    run(tmp_path / "first")
+    before = metrics.METRIC_COMPILATION_TIME().getCount()
+    run(tmp_path / "second")
+    assert metrics.METRIC_COMPILATION_TIME().getCount() - before == 0

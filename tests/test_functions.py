@@ -310,3 +310,26 @@ def test_flat_map_rejects_reserved_input_column(spark):
     step = python_flat_map("s", lambda t: [(t,)], ["text"], "chunk string")
     with _pytest.raises(ValueError, match="_pz_err"):
         step(df)
+
+
+def test_python_apply_never_calls_fn_on_dead_letters(spark):
+    # dead-lettered rows ride the one Arrow projection masked off: a
+    # fn call on them would raise and overwrite the upstream error
+    from pipz_spark.core.errors import ensure_error_column
+
+    def only_live(x):
+        if x == 2:
+            raise AssertionError("fn ran on a dead-lettered row")
+        return x * 2
+
+    df = ensure_error_column(spark.createDataFrame([(1,), (2,), (3,)], "x int"))
+    tainted = P.apply("taint", error_when=F.col("x") == 2, message="pre-existing")(df)
+    for timeout in (None, 5.0):
+        out = python_apply(
+            "double", only_live, ["x"], "int", output="y", timeout_seconds=timeout
+        )(tainted)
+        dead = split_failed(out).collect()
+        assert [(r["x"], r["y"], r[ERROR_COL]["message"]) for r in dead] == [
+            (2, None, "pre-existing")
+        ]
+        assert sorted((r["x"], r["y"]) for r in split_ok(out).collect()) == [(1, 2), (3, 6)]

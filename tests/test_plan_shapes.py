@@ -721,3 +721,50 @@ def test_link_predict_wedges_combine_before_exchange(spark):
     assert "LeftAnti" in plan
     assert "CartesianProduct" not in plan
     assert "ArrowEvalPython" not in plan
+
+
+def test_corpus_cleaning_runs_its_udf_once_over_one_scan(spark, documents):
+    # the corpus_dedup benchmark's cleaning sequence. python_apply and
+    # exact_dedup are one branch each: an ok/failed split unioned back
+    # (or a keeper self-join) re-derives the whole lineage per branch,
+    # so the normalizer UDF ran six times per row over four scans.
+    # "Scan parquet" also counts the scan printed inside an
+    # InMemoryTableScan of the cached fixture.
+    from pipz_spark import P
+    from pipz_spark.datapipe import exact_dedup, lang_id, quality_score, token_count
+    from pipz_spark.functions import python_apply
+
+    gate = P.apply(
+        "quality-gate",
+        error_when=(F.col("n_tokens") < 5) | (F.col("quality") < 0.1),
+        message="low quality",
+    )
+    normalize = python_apply(
+        "normalize", lambda t: " ".join(t.split()), ["text"], "string", output="text_norm"
+    )
+    clean = P.sequence(
+        "clean", token_count(), quality_score(), gate, lang_id(), normalize,
+        exact_dedup(text_col="text_norm"),
+    )
+    plan = clean(documents)._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("ArrowEvalPython") == 1
+    assert plan.count("Scan parquet") == 1
+    assert plan.count("Exchange") == 1  # the dedup window's
+    assert "Union" not in plan and "Join" not in plan
+
+
+def test_flat_map_expands_over_one_scan(spark, documents):
+    # dead-lettered input rows ride the lateral masked off instead of
+    # a second, unioned passthrough branch over the same scan
+    from pipz_spark import P
+    from pipz_spark.functions import python_flat_map
+
+    gate = P.apply("gate", error_when=F.length("text") < 200, message="short")
+    step = python_flat_map(
+        "split", lambda t: [(w,) for w in t.split()[:3]], ["text"], "chunk string",
+        keep=["doc_id"],
+    )
+    plan = step(gate(documents))._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("Scan parquet") == 1
+    assert plan.count("EvalPythonUDTF") == 1
+    assert "Union" not in plan
