@@ -24,6 +24,7 @@ from collections.abc import Callable, Sequence
 from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from typing import Any, TypeVar
 
+from ..core.caches import worker_context
 from . import signals as S
 
 T = TypeVar("T")
@@ -133,7 +134,9 @@ def timeout(
         finally:
             finished.set()
 
-    worker = threading.Thread(target=run, name=f"pipz-{name}", daemon=True)
+    worker = threading.Thread(
+        target=worker_context().run, args=(run,), name=f"pipz-{name}", daemon=True
+    )
     worker.start()
     if not finished.wait(seconds) and not finished.is_set():
         bus.emit(S.TIMEOUT_TRIGGERED, name=name, seconds=seconds)
@@ -460,7 +463,7 @@ def worker_pool(
     # preempted) but no new work starts — first error wins
     # (workerpool.go:163-190).
     with ThreadPoolExecutor(max_workers=workers) as ex:
-        futs = [ex.submit(run, a) for a in actions]
+        futs = [ex.submit(worker_context().run, run, a) for a in actions]
         wait(futs, return_when=FIRST_EXCEPTION)
         if first_error:
             for f in futs:
@@ -514,7 +517,9 @@ def race_actions(
             outcomes.put((i, "err", e))
 
     threads = [
-        threading.Thread(target=run, args=(i,), name=f"pipz-{name}-{i}", daemon=True)
+        threading.Thread(
+            target=worker_context().run, args=(run, i), name=f"pipz-{name}-{i}", daemon=True
+        )
         for i in range(len(fns))
     ]
     for t in threads:
@@ -599,6 +604,6 @@ def scaffold(
             pass
 
     for a in actions:
-        t = threading.Thread(target=run, args=(a,), daemon=True)
+        t = threading.Thread(target=worker_context().run, args=(run, a), daemon=True)
         t.start()
         bus.emit(S.SCAFFOLD_DISPATCHED, name=name)

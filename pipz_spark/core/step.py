@@ -26,6 +26,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame
 
+from . import caches
 from .errors import ensure_error_column
 from .identity import Identity
 
@@ -56,7 +57,6 @@ class Step:
         self.children = tuple(children)
         self.metadata = dict(metadata or {})
         self._close_hooks: list[Callable[[], None]] = []
-        self._release_hooks: list[Callable[[], None]] = []
         self._closed = False
 
     @property
@@ -110,36 +110,16 @@ class Step:
         self._close_hooks.append(hook)
         return self
 
-    def on_release(self, hook: Callable[[], None]) -> "Step":
-        """Register a RE-CREATABLE resource release (cache unpersist).
-        Unlike close hooks these can be drained repeatedly — each apply
-        that persists registers a fresh hook, and ``release_caches``
-        frees them once their consumers have acted. This is what keeps
-        a step tree inside a foreachBatch loop from accumulating cached
-        blocks for the life of the stream."""
-        self._release_hooks.append(hook)
-        return self
-
-    def release_caches(self) -> None:
-        """Drain release hooks (self + children, LIFO), swallowing
-        errors. Safe to call between applies; NOT a close."""
-        for child in reversed(self.children):
-            try:
-                child.release_caches()
-            except Exception:
-                pass
-        hooks, self._release_hooks = self._release_hooks, []
-        for hook in reversed(hooks):
-            try:
-                hook()
-            except Exception:
-                pass
+    def release_caches(self) -> int:
+        """Free the caller's cached frames; safe between applies, NOT a close."""
+        return caches.release_caches()
 
     def close(self) -> None:
         """Idempotent close cascading to children in LIFO order, like
         the reference (sequence.go:332-347: children closed reverse of
         registration; double-close is a no-op). Hook errors are
-        swallowed so one failing cleanup can't block the rest."""
+        swallowed so one failing cleanup can't block the rest. Frees the
+        caller's cached frames before running this step's own hooks."""
         if self._closed:
             return
         self._closed = True
@@ -148,12 +128,7 @@ class Step:
                 child.close()
             except Exception:
                 pass
-        for hook in reversed(self._release_hooks):
-            try:
-                hook()
-            except Exception:
-                pass
-        self._release_hooks = []
+        caches.release_caches()
         for hook in reversed(self._close_hooks):
             try:
                 hook()

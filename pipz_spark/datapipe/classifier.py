@@ -125,7 +125,7 @@ def train_quality_classifier(
     # trade) and every epoch becomes a scan of pre-hashed ints.
     # Identical math: transform() preserves array order, so the
     # decimal score accumulates the same values in the same order.
-    from ._caches import track
+    from ..core.caches import track
     from ._util import fan_out
 
     # fan_out before the hash pass: a small corpus arrives from the

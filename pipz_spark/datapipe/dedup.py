@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from .graph import connected_components
 
+from ..core.caches import track
 from ..core.errors import ERROR_COL, ensure_error_column, is_ok
 from .text import WS
 from ..core.step import Step
@@ -238,9 +239,7 @@ def _bucket_pairs(bucketed: DataFrame, keys: list[str], max_bucket: int) -> Data
       serializing k² in one task.
 
     The cap therefore selects the PLAN SHAPE, never the recall."""
-    from . import _caches
-
-    grouped = _caches.track(
+    grouped = track(
         bucketed.groupBy(*keys)
         .agg(F.array_sort(F.collect_list("_id")).alias("ids"))
         .where(F.size("ids") >= 2)
@@ -347,13 +346,11 @@ def _cross_bucket_pairs(
       OTHER side's salts, bounding every task's pair output at
       ~max_bucket² whatever the bucket sizes. The cap selects the
       PLAN SHAPE, never recall."""
-    from . import _caches
-
     sizes = (
         nb.groupBy(*keys).agg(F.count(F.lit(1)).alias("_nn"))
         .join(rb.groupBy(*keys).agg(F.count(F.lit(1)).alias("_nr")), keys)
     )
-    big_keys = _caches.track(
+    big_keys = track(
         sizes.where((F.col("_nn") > max_bucket) | (F.col("_nr") > max_bucket)).persist()
     )
     has_big = big_keys.limit(1).count() > 0
@@ -469,8 +466,6 @@ def ngram_jaccard(
     against the cached projection shuffle the arrays once per side at
     |relevant docs| rows, not |pair sides| rows.) Cost stays
     O(candidates), never O(n²)."""
-    from . import _caches
-
     # the pair list feeds BOTH the relevance prune and the verify
     # joins; without a pinned cache each consumer recomputes the
     # upstream candidate/estimate stages (skinny rows — cheap to hold)
@@ -482,7 +477,7 @@ def ngram_jaccard(
     # effect of that action; the verify joins then read the filled
     # cache. An eager count() here was a whole extra driver-blocking
     # job per query (~0.5 s of scheduling at sf0.1) buying nothing.
-    sides = _caches.track(pairs.select("id_a", "id_b").persist())
+    sides = track(pairs.select("id_a", "id_b").persist())
     relevant = fan_out(df).join(
         sides.select(F.explode(F.array("id_a", "id_b")).alias("_id")).distinct(),
         F.col(id_col) == F.col("_id"),
@@ -493,7 +488,7 @@ def ngram_jaccard(
         if gram_fn is not None
         else char_shingles(F.col(text_col), shingle_k)
     )
-    sh = _caches.track(
+    sh = track(
         relevant.select(F.col(id_col).alias("_id"), gexpr.alias("_sh")).persist()
     )
     sh.count()  # pin before both join sides race the cache
@@ -561,14 +556,13 @@ def jaccard_near_dup_pairs(
     if a collision bridges a pair whose every true shared gram is
     over-cap AND whose Jaccard clears the threshold: ~(n_grams²/2⁶⁴)
     times an already-rare setup, accepted and documented."""
-    from . import _caches
     from ._util import fan_out
 
     docs = fan_out(df).where(F.trim(F.col(text_col)) != "")
     # consumed twice (df-count aggregation + the semi-join probe);
     # persist the skinny (id, hash) rows so the gram-building string
     # expression runs once
-    grams = _caches.track(
+    grams = track(
         docs.select(
             F.col(id_col).alias("_id"),
             F.explode(
@@ -654,8 +648,6 @@ def near_dup_pairs(
     what the repo's plan-canary discipline exists to prevent."""
     sigs = None
     if estimate_filter:
-        from . import _caches
-
         # persisted: the banding pass and both estimate join sides
         # read it. NOT eagerly pinned: the first action that touches
         # it (_bucket_pairs' grouped pin) reaches sigs exactly ONCE
@@ -663,7 +655,7 @@ def near_dup_pairs(
         # inside that action and the estimate joins read the filled
         # cache — the old count() was one whole extra sequential job
         # per query for a cache the very next action fills anyway.
-        sigs = _caches.track(
+        sigs = track(
             minhash_signatures_df(
                 df, id_col=id_col, text_col=text_col,
                 num_hashes=num_hashes, shingle_k=shingle_k,
@@ -758,7 +750,6 @@ def cross_near_dup_pairs(
 
     Returns (new_id, ref_id, jaccard) at/above ``threshold``.
     """
-    from . import _caches
     from ._util import fan_out
 
     def sign(df: DataFrame) -> DataFrame:
@@ -774,8 +765,11 @@ def cross_near_dup_pairs(
     # its banding explode), so both caches fill race-free inside the
     # action the plan needs anyway; the estimate joins read the
     # filled caches. The old per-frame count()s were two extra
-    # sequential driver-blocking jobs per call.
-    sn = _caches.track(sign(new).persist())
+    # sequential driver-blocking jobs per call. Caveat: with a hot
+    # bucket, that action (big_keys.limit(1).count()) can stop early
+    # and leave the caches partly filled; the estimate joins then
+    # recompute the rest (slower, same result).
+    sn = track(sign(new).persist())
     if ref_sigs is not None:
         first = ref_sigs.select(F.size("_sig").alias("_w")).first()
         if first is not None and first["_w"] != num_hashes:
@@ -786,7 +780,7 @@ def cross_near_dup_pairs(
             )
         sr = ref_sigs
     else:
-        sr = _caches.track(sign(ref).persist())
+        sr = track(sign(ref).persist())
 
     cand = _cross_bucket_pairs(
         banded_signatures(sn, num_hashes=num_hashes, bands=bands)
@@ -796,7 +790,7 @@ def cross_near_dup_pairs(
         ["band", "band_hash"],
         max_bucket,
     )
-    cand = _caches.track(
+    cand = track(
         _minhash_estimate_filter(
             cand, sn, sr, "new_id", "ref_id", threshold, num_hashes
         ).persist()
@@ -952,13 +946,12 @@ def simhash_near_dup_pairs(
             f"blocks={blocks} cannot guarantee candidates for max_hamming={max_hamming}; "
             f"need blocks > max_hamming (pigeonhole)"
         )
-    from . import _caches
 
     width = 64 // blocks
     # one long per doc; read by the chunking pass AND both hash
     # join-backs — persisted like near_dup_pairs' signatures, released
     # deterministically via datapipe.release_caches()
-    h = _caches.track(
+    h = track(
         simhash_df(df, id_col=id_col, text_col=text_col, hash_fn=hash_fn).persist()
     )
     # no eager pin: the first action (_bucket_pairs' grouped pin)
@@ -1023,8 +1016,6 @@ def dedup_clusters(
     the operator exists to prevent. Every cluster with at least one
     present member keeps exactly one.
     """
-    from . import _caches
-
     if pairs is None:
         pairs = near_dup_pairs(df, threshold=threshold, id_col=id_col, text_col=text_col)
     comp = connected_components(pairs)
@@ -1032,7 +1023,7 @@ def dedup_clusters(
     # read this corpus-wide join — without the persist the second
     # consumer re-executes it per action (rep is broadcast-small, so
     # no reusable exchange exists on the labeled side)
-    labeled = _caches.track(
+    labeled = track(
         df.select(id_col)
         .join(comp.withColumnRenamed("node", id_col), id_col, "left")
         .select(id_col, F.coalesce("component", F.col(id_col)).alias("_comp"))

@@ -73,8 +73,12 @@ from __future__ import annotations
 import itertools
 import threading
 
+from py4j.protocol import Py4JJavaError
+from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..core.caches import track
 
 # serializes _star_contraction's session-conf save/set/restore window
 # (see the comment at its use site)
@@ -213,10 +217,17 @@ def pagerank(
         # while the fluent loop resolves incrementally — long runs
         # (which should pass checkpoint_every anyway) and the eager
         # tol/checkpoint modes keep the DataFrame form.
-        return _pagerank_sql(
-            edges, iters, src_col, dst_col, init_q, num, den, base,
-            seeds, weight_col,
-        )
+        try:
+            return _pagerank_sql(
+                edges, iters, src_col, dst_col, init_q, num, den, base,
+                seeds, weight_col,
+            )
+        except (AnalysisException, Py4JJavaError):
+            # spark.sql() only analyzes, so this is the analyzer's
+            # failure, e.g. a lowered spark.sql.analyzer.maxIterations
+            # (a RuntimeException, not an AnalysisException): the loop
+            # below resolves incrementally and gives the same ranks
+            pass
 
     # No .persist() on the per-iteration inputs, DELIBERATELY: every
     # consumer of the edge list and node table sits behind a shuffle
@@ -364,7 +375,8 @@ _PR_VIEW_IDS = itertools.count()
 
 # SQL-parse path bound: a WITH chain past ~8 iterations trips the
 # analyzer's Resolution iteration cap (each CTE reference re-resolves
-# its definition), while the fluent loop resolves incrementally
+# its definition), while the fluent loop resolves incrementally; set
+# for the default cap of 100 (pagerank falls back under a lower one).
 _PR_SQL_MAX_ITERS = 8
 
 
@@ -391,7 +403,11 @@ def _pagerank_sql(
     ev = f"__pipz_pr_e_{tag}"
     edges.createOrReplaceTempView(ev)
     views = [ev]
-    s, d = f"`{src_col}`", f"`{dst_col}`"
+
+    def ident(name: str) -> str:  # backquoted, backticks doubled
+        return "`" + name.replace("`", "``") + "`"
+
+    s, d = ident(src_col), ident(dst_col)
     try:
         if weight_col is None:
             e_cte = (
@@ -404,7 +420,7 @@ def _pagerank_sql(
             # the loop form's order exactly
             e_cte = (
                 f"e AS (SELECT * FROM (SELECT {s} AS _src, {d} AS _dst, "
-                f"CAST(`{weight_col}` AS BIGINT) AS _w FROM {ev} "
+                f"CAST({ident(weight_col)} AS BIGINT) AS _w FROM {ev} "
                 f"WHERE {s} IS NOT NULL AND {d} IS NOT NULL) "
                 f"WHERE _w IS NOT NULL AND _w > 0)"
             )
@@ -519,7 +535,6 @@ def hits(
         raise ValueError(f"need norm_every > 0, got {norm_every}")
     if norm_target <= 0:
         raise ValueError(f"need norm_target > 0, got {norm_target}")
-    from . import _caches
 
     # persist HERE, unlike pagerank's deliberate no-persist: that
     # machine's consumers all hash on the SAME node key, so
@@ -528,8 +543,8 @@ def hits(
     # the hub step, node for the universe), no two exchanges match,
     # and an unpersisted edge plan re-runs its upstream join
     # 4×iters times (measured 13.0 s vs 4.4 s at sf0.1, iters=2)
-    e = _caches.track(_directed_front(edges, src_col, dst_col).persist())
-    nodes = _caches.track(_node_universe(e).persist())
+    e = track(_directed_front(edges, src_col, dst_col).persist())
+    nodes = track(_node_universe(e).persist())
     if iters == 0:
         # the zero-iteration basis (hubs 1, authorities 0) returned
         # directly — the loop below always rebinds both frames, so
@@ -1027,8 +1042,6 @@ def _star_rounds(canon: DataFrame, n_canon: int, max_rounds: int) -> DataFrame:
     the loop — the combined materialize+check is the per-pair
     action — so the scaled conf never leaks into the caller's lazy
     plans)."""
-    from . import _caches
-
     # groupBy(u).min + join-back computes each row's partition min —
     # which is exactly a partition-only window MIN. The window form
     # emits identical rows from ONE hash(u) exchange (+ an in-stage
@@ -1101,7 +1114,7 @@ FROM {sm} s LEFT JOIN {cn} c ON s.u = c.u AND s.v = c.v
     try:
         return _star_rounds_body(
             spark, canon, n_canon, max_rounds, cn_view, sm_view,
-            round_sql, chk_sql_tpl, _caches,
+            round_sql, chk_sql_tpl,
         )
     finally:
         spark.catalog.dropTempView(cn_view)
@@ -1113,13 +1126,13 @@ _STAR_VIEW_IDS = itertools.count()
 
 def _star_rounds_body(
     spark, canon, n_canon, max_rounds, cn_view, sm_view,
-    round_sql, chk_sql_tpl, _caches,
+    round_sql, chk_sql_tpl,
 ):
     prev_cache: DataFrame | None = None
     for _ in range(max_rounds):
         canon.createOrReplaceTempView(cn_view)
         small = spark.sql(round_sql).persist()
-        _caches.track(small)
+        track(small)
         small.createOrReplaceTempView(sm_view)
         # the check action is the round's ONLY job (see the module
         # comments above): it fills small's cache and reads two
@@ -1293,8 +1306,6 @@ def connected_components(
     explicit ``"label"``/``"star"`` are requests for a specific
     distributed algorithm.
     """
-    from . import _caches
-
     if algorithm == "contract":
         algorithm = "star"
     if algorithm not in ("auto", "label", "star"):
@@ -1316,7 +1327,7 @@ def connected_components(
     # partner are absent from the map (no information, not a
     # singleton claim), and the driver fast path needs no NaN guard:
     # pandas can't widen the probe's int columns to float64.
-    e = _caches.track(
+    e = track(
         _directed_front(pairs, id_a, id_b, out=("u", "v")).persist()
     )
     if algorithm == "auto" and driver_cap > 0:
@@ -1335,7 +1346,7 @@ def connected_components(
                 e.schema["u"].dataType,
             )
     # symmetrize; every round reads this frame, so pin it (skinny rows)
-    edges = _caches.track(
+    edges = track(
         e.unionByName(e.select(F.col("v").alias("u"), F.col("u").alias("v"))).persist()
     )
     if algorithm == "star":

@@ -186,7 +186,7 @@ def perplexity_buckets(
     on a sample via ``fit_on``."""
     if buckets <= 0:
         raise ValueError(f"need buckets > 0, got {buckets}")
-    from ._caches import track
+    from ..core.caches import track
     from .rank import grouped_rank, ntile_expr
 
     scores = lm_quality_scores(df, id_col=id_col, text_col=text_col, fit_on=fit_on)

@@ -325,7 +325,7 @@ def image_near_dup(
             f"need 0 <= max_hamming < {_AHASH_BANDS} (pigeonhole over "
             f"{_AHASH_BANDS} bands), got {max_hamming}"
         )
-    from . import _caches
+    from ..core import caches as _caches
     from .dedup import _bucket_pairs
 
     h = _caches.track(

@@ -30,7 +30,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from ._caches import track
+from ..core.caches import track
 
 
 def grouped_rank(

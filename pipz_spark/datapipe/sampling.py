@@ -501,7 +501,7 @@ def token_budget_cap(
             # upstream (r8 review). Applying this step therefore RUNS
             # a Spark job, the same documented eager-pin trade as
             # near_dup_pairs; release via datapipe.release_caches().
-            from . import _caches
+            from ..core import caches as _caches
 
             out = _caches.track(out.persist())
             totals = (

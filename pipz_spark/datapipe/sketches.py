@@ -878,7 +878,7 @@ def _mg_prune(
             ),
         )
     else:
-        from ._caches import track
+        from ..core.caches import track
         from .rank import grouped_rank
 
         # Three consumers read the build-path rank (kept rows, the

@@ -34,6 +34,7 @@ from itertools import count as _count
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..core.caches import track
 from ..core.errors import ERROR_COL, is_ok, make_error
 from ..core.step import Step, identity_step
 from .processors import _guarded, _resolve, transform, Updates
@@ -177,12 +178,9 @@ def switch(
     def fn_steps(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
         # Heavyweight-branch mode: persist the routed input so the k+1
         # branch filters share one materialization of the upstream plan
-        # instead of re-scanning it per route.
-        routed = df.withColumn(_ROUTE, F.when(is_ok(), route_key)).persist()
-        # cache released per batch (release_caches) or at close —
-        # without this a step tree applied per micro-batch accumulates
-        # cached blocks for the life of the stream
-        step.on_release(routed.unpersist)
+        # instead of re-scanning it per route (tracked: a stream frees
+        # it per micro-batch instead of accumulating it).
+        routed = track(df.withColumn(_ROUTE, F.when(is_ok(), route_key)).persist())
         outs: list[DataFrame] = []
         keys = list(branches.keys())
         for key, child in branches.items():
@@ -202,14 +200,13 @@ def switch(
     children = tuple(b for b in branches.values() if isinstance(b, Step))
     if isinstance(default, Step):
         children += (default,)
-    step = Step(
+    return Step(
         name,
         fn_expr if expr_mode else fn_steps,
         node_type="switch",
         children=children,
         metadata={"routes": list(branches.keys()), "mode": "expr" if expr_mode else "steps"},
     )
-    return step
 
 
 def filter_if(name: str, condition: Column, child: Step | Updates) -> Step:
@@ -237,15 +234,13 @@ def filter_if(name: str, condition: Column, child: Step | Updates) -> Step:
     def fn_step(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
         # null-safe: a NULL condition counts as "no hit" (row passes through)
         hit_cond = F.coalesce(is_ok() & condition, F.lit(False))
-        cached = df.persist()
-        step.on_release(cached.unpersist)  # released per batch / at close
+        cached = track(df.persist())
         processed = child.apply(cached.where(hit_cond), path)  # type: ignore[union-attr]
         miss = cached.where(~hit_cond)
         return processed.unionByName(miss, allowMissingColumns=True)
 
     if isinstance(child, Step):
-        step = Step(name, fn_step, node_type="filter", children=(child,))
-        return step
+        return Step(name, fn_step, node_type="filter", children=(child,))
     return Step(name, fn_expr, node_type="filter")
 
 
@@ -436,8 +431,7 @@ def handle(
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
         from ..control import signals as S
 
-        out = child.apply(df, path).persist()
-        step.on_release(out.unpersist)  # released per batch / at close
+        out = track(child.apply(df, path).persist())
         failed = out.where(F.col(ERROR_COL).isNotNull())
         try:
             if isinstance(handler, Step):
@@ -462,8 +456,7 @@ def handle(
             b.emit(S.HANDLE_ERROR_HANDLED, name=name, handled=None)
         return out
 
-    step = Step(name, fn, node_type="handle", children=(child,))
-    return step
+    return Step(name, fn, node_type="handle", children=(child,))
 
 
 # Row-dropping selection — native engine capability beyond the

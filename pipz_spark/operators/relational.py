@@ -25,6 +25,7 @@ from collections.abc import Mapping, Sequence as Seq
 from pyspark.sql import Column, DataFrame, Window, WindowSpec
 from pyspark.sql import functions as F
 
+from ..core.caches import track
 from ..core.errors import ERROR_COL, ensure_error_column, is_ok, null_error
 from ..core.step import Step
 
@@ -134,19 +135,16 @@ def coalesce_rows(name: str, num_partitions: int) -> Step:
 
 def persist_step(name: str, storage_level: str = "MEMORY_AND_DISK") -> Step:
     """Materialization boundary (SURVEY §7.3.1: cache at connector
-    boundaries when a subtree feeds multiple consumers). The Step
-    registers an on_close hook so Close() releases the cache."""
+    boundaries when a subtree feeds multiple consumers). The cache is
+    tracked, so ``release_caches()`` or the Step's ``close()`` frees it."""
     from pyspark import StorageLevel
 
     level = getattr(StorageLevel, storage_level)
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        cached = df.persist(level)
-        step.on_release(lambda: cached.unpersist())
-        return cached
+        return track(df.persist(level))
 
-    step = Step(name, fn, node_type="persist", metadata={"level": storage_level})
-    return step
+    return Step(name, fn, node_type="persist", metadata={"level": storage_level})
 
 
 def salted_join(

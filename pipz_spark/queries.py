@@ -2881,7 +2881,7 @@ def _cs_pack_s(key: Column) -> Column:
 
 
 def _cs_unpack(col: Column) -> Column:
-    """Decode _cs_pack back to the declared string id — one codegen
+    """Decode _cs_pack_c/_cs_pack_s back to the declared string id — one codegen
     projection over the FINAL per-node frame only."""
     return F.when(
         col % 2 == 0, F.concat(F.lit("c"), F.shiftright(col, 1).cast("string"))
@@ -5079,7 +5079,7 @@ _DP_HLL_OVERLAP_SQL = _hll_overlap_sql()
 # every comparison is BIGINT (values pass through untouched).
 def _dp_kll_quantiles(spark, sf):
     from .datapipe import kll_merge, kll_quantile, kll_sketch
-    from .datapipe._caches import track
+    from .core.caches import track
 
     li = _t(spark, sf, "lineitem").select(
         "l_returnflag",

@@ -19,6 +19,7 @@ from pyspark.sql import functions as F
 from .._scratch import scratch_dir
 from pyspark.sql import types as T
 
+from ..core.caches import release_caches, track
 from ..core.errors import ERROR_COL, is_failed, is_ok
 from ..core.step import Step
 from ..control import signals as S
@@ -441,7 +442,7 @@ def run_step_stream(
         direct_counts = bus.has_direct_listeners(S.SEQUENCE_COMPLETED)
         multi_consumer = dead_letter_sink is not None or direct_counts
         if multi_consumer:
-            out = out.persist()
+            out = track(out.persist())
         try:
             ok = out.where(is_ok()).drop(ERROR_COL)
             dead = out.where(is_failed())
@@ -503,12 +504,10 @@ def run_step_stream(
                 if limiter is not None:
                     persisted["limiter"] = limiter.snapshot()
                 state_store.save(persisted)
-            if multi_consumer:
-                out.unpersist()
-            # free step-internal caches (switch/filter/handle persist
-            # per apply) now that this batch's sink actions are done —
-            # otherwise a long-running stream accumulates cached blocks
-            step.release_caches()
+            # free every frame this batch tracked (the batch persist,
+            # Step and operator caches) once its sinks are done, or a
+            # long-running stream accumulates cached blocks
+            release_caches()
 
     writer = stream.writeStream.foreachBatch(process).queryName(query_name)
     if output_mode:

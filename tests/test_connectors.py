@@ -326,6 +326,9 @@ def test_step_mode_caches_released(spark):
     child = P.apply("noop", error_when=F.lit(False), message="x")
     pipe = P.filter_if("maybe", F.col("o_totalprice") > 100, child)
     sc = spark.sparkContext
+    # the owner is this thread's: drain what earlier tests left in it
+    # (handle/switch frames) so the baseline counts only foreign caches
+    pipe.release_caches()
     baseline = sc._jsc.getPersistentRDDs().size()
     out = pipe(rows)
     out.count()
@@ -335,3 +338,121 @@ def test_step_mode_caches_released(spark):
     # repeated drain is a no-op, and close() still works afterwards
     pipe.release_caches()
     pipe.close()
+
+
+def test_release_on_another_thread_keeps_this_threads_caches(spark):
+    # the cache owner is per caller context: a release on another
+    # thread (a second stream's foreachBatch, a concurrent batch job)
+    # must not unpersist the frame a live grouped_rank plan reads —
+    # that cache is what keeps its two range-partition passes on the
+    # same sampled boundaries
+    import threading
+
+    from pipz_spark.datapipe import grouped_rank, release_caches
+
+    # fresh uncached input: the table fixtures are session-cached and
+    # would put an InMemoryTableScan of their own into the plan
+    df = spark.range(500).select(
+        F.col("id"), (F.col("id") % 3).alias("grp"), ((F.col("id") * 7) % 101).alias("score")
+    )
+    out = grouped_rank(
+        df, group_cols=["grp"], order_cols=[F.col("score").desc(), F.col("id")]
+    )
+    released: list[int] = []
+    other = threading.Thread(target=lambda: released.append(release_caches()))
+    other.start()
+    other.join(timeout=60)
+    try:
+        assert not other.is_alive()
+        assert released == [0]
+        plan = out._jdf.queryExecution().executedPlan().toString()
+        assert "InMemoryTableScan" in plan
+    finally:
+        release_caches()
+
+
+def test_shared_owner_loses_no_frame_under_concurrent_track_and_release():
+    # workers append to the caller's owner list while a sibling drains
+    # it: every frame must be unpersisted exactly once
+    import sys
+    import threading
+
+    from pipz_spark.control import worker_pool
+    from pipz_spark.core.caches import release_caches, track, worker_context
+
+    class Frame:
+        unpersisted = 0
+
+        def unpersist(self):
+            self.unpersisted += 1
+
+    release_caches()
+    frames = [Frame() for _ in range(16 * 300)]
+    released: list[int] = []
+    done = threading.Event()
+
+    def drain():
+        while not done.is_set():
+            released.append(release_caches())
+
+    prev = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        drainer = threading.Thread(target=worker_context().run, args=(drain,))
+        drainer.start()
+        worker_pool(
+            [lambda i=i: [track(f) for f in frames[i::16]] for i in range(16)],
+            workers=16,
+        )
+        done.set()
+        drainer.join(timeout=30)
+        assert not drainer.is_alive()
+    finally:
+        sys.setswitchinterval(prev)
+    released.append(release_caches())
+    assert sum(released) == len(frames)
+    assert all(f.unpersisted == 1 for f in frames)
+
+
+def test_worker_tracks_into_an_owner_its_caller_never_touched():
+    # a fresh thread has no owner until first use; timeout's worker
+    # must still track into the caller's, not into one of its own
+    import threading
+
+    from pipz_spark.control import timeout
+    from pipz_spark.core.caches import release_caches, track
+
+    class Frame:
+        def unpersist(self):
+            pass
+
+    got: list[int] = []
+
+    def caller():
+        timeout(lambda: track(Frame()), 30)
+        got.append(release_caches())
+
+    t = threading.Thread(target=caller)
+    t.start()
+    t.join(timeout=30)
+    assert not t.is_alive()
+    assert got == [1]
+
+
+def test_caches_tracked_under_timeout_belong_to_the_caller(spark):
+    # timeout runs the action on a worker thread; what the action
+    # caches must still be freed by the caller's release
+    from pipz_spark.control import timeout
+    from pipz_spark.datapipe import near_dup_pairs, release_caches
+
+    release_caches()
+    docs = spark.createDataFrame(
+        [(1, "alpha beta gamma delta epsilon"), (2, "alpha beta gamma delta epsilon")],
+        "doc_id long, text string",
+    )
+    sc = spark.sparkContext
+    baseline = sc._jsc.getPersistentRDDs().size()
+    assert timeout(lambda: near_dup_pairs(docs, threshold=0.5).count(), 300) == 1
+    assert sc._jsc.getPersistentRDDs().size() > baseline
+    assert release_caches() > 0
+    assert sc._jsc.getPersistentRDDs().size() == baseline

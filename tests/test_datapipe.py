@@ -4441,6 +4441,55 @@ def test_weighted_pagerank_matches_replay(spark):
     assert uni == wuni
 
 
+def test_pagerank_sql_path_quotes_backtick_column_names(spark):
+    """The lazy SQL path backquotes column names with embedded
+    backticks doubled, so a name holding a backtick ranks exactly as
+    the fluent loop does on the same graph."""
+    from pipz_spark.datapipe import pagerank
+
+    wedges = [
+        ("a", "b", 3), ("a", "c", 1), ("b", "c", 2), ("c", "a", 5),
+        ("c", "d", 1), ("d", "a", 4), ("a", "d", 0), ("b", "d", None),
+    ]
+    df = spark.createDataFrame(wedges, "src string, dst string, w long")
+    ticked = df.toDF("s`rc", "d`st", "w`t")
+
+    def ranks(frame, **kw):
+        return {r["node"]: (r["rank_q"], r["outdeg"]) for r in pagerank(frame, **kw).collect()}
+
+    # checkpoint_every routes to the fluent loop (values identical)
+    loop = ranks(df, iters=3, weight_col="w", checkpoint_every=3)
+    assert ranks(ticked, iters=3, src_col="s`rc", dst_col="d`st", weight_col="w`t") == loop
+    assert loop == _ref_wpagerank(wedges, 3)
+
+
+def test_pagerank_falls_back_to_loop_under_lowered_analyzer_cap(spark):
+    """A session that lowers spark.sql.analyzer.maxIterations below
+    what the SQL path's WITH chain needs still ranks: the SQL path's
+    analysis failure falls back to the fluent loop."""
+    from pipz_spark.datapipe import pagerank
+
+    pairs = [
+        ("a", "b"), ("b", "c"), ("c", "a"), ("c", "d"),
+        ("d", "a"), ("e", "a"), ("a", "e"),
+    ]
+    df = spark.createDataFrame(pairs, "src string, dst string")
+    key = "spark.sql.analyzer.maxIterations"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "10")
+    try:
+        got = {
+            r["node"]: (r["rank_q"], r["outdeg"])
+            for r in pagerank(df, iters=8).collect()
+        }
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
+    assert got == _ref_pagerank(pairs, 8)
+
+
 # ---- r16: LPA community detection + multi-source BFS --------------
 
 

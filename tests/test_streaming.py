@@ -143,6 +143,48 @@ def test_run_step_stream_dead_letter_split(spark, events):
     assert got["ok"] == events.count() - n_bad
 
 
+def test_run_step_stream_releases_operator_caches_per_batch(spark, tmp_path):
+    # token_budget_cap's global form persists its hashed frame through
+    # the cache owner, and a dead-letter sink makes run_step_stream
+    # persist the batch; both must be freed after every micro-batch,
+    # or each trigger leaks cached frames
+    from pipz_spark.datapipe import token_budget_cap
+
+    src = tmp_path / "docs"
+    for i in range(3):
+        spark.range(i * 20, i * 20 + 20).select(
+            F.col("id").alias("doc_id"), (F.col("id") % 7 + 1).alias("n_tokens")
+        ).coalesce(1).write.parquet(str(src / f"part{i}"))
+    stream = (
+        spark.readStream.schema("doc_id long, n_tokens long")
+        .option("maxFilesPerTrigger", 1)
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+    batches: list[int] = []
+
+    def ok_sink(df, batch_id):
+        df.count()
+        batches.append(batch_id)
+
+    sc = spark.sparkContext
+    baseline = sc._jsc.getPersistentRDDs().size()
+    q = run_step_stream(
+        stream,
+        token_budget_cap("cap", budget=40),
+        ok_sink,
+        lambda df, batch_id: df.count(),
+        checkpoint=str(tmp_path / "ckpt"),
+        query_name="pipz-cache-release-test",
+    )
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    assert len(batches) >= 3
+    assert sc._jsc.getPersistentRDDs().size() == baseline
+
+
 def test_run_step_stream_breaker_opens(spark):
     stream = read_events_stream(spark, SF_DIR)
     step = P.transform("noop", {})
