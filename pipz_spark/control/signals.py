@@ -42,7 +42,8 @@ PIPELINE_COMPLETED = "pipeline.completed"
 # Data-plane signals (signals.go:7-137 names switch.routed,
 # handle.error-handled, ...): in a batch engine these are aggregate
 # counts, observable only when an ACTION materializes them — so they
-# emit from the terminal boundaries (write_split, run_step_stream,
+# emit from the terminal boundaries (the landing shared by write_split
+# and run_step_stream — write_split's counts ride its own ok write;
 # handle's eager handler drive) and from the observation bridge
 # (observe.observed_routing), never per row.
 HANDLE_ERROR_HANDLED = "handle.error-handled"
@@ -73,10 +74,10 @@ class SignalBus:
 
     def has_direct_listeners(self, signal: str) -> bool:
         """True only for handlers subscribed to ``signal`` BY NAME.
-        Emitters whose fields cost a Spark ACTION gate on this, so a
-        generic ``on_any`` logger doesn't silently add a count() job
-        to every apply — opting into the cost means naming the
-        signal."""
+        Emitters whose counts cost a Spark job (``handle``'s and a
+        stream's, over caller code no count can ride) gate on this, so
+        a generic ``on_any`` logger doesn't silently add a job to every
+        apply — opting into the cost means naming the signal."""
         return bool(self._handlers.get(signal))
 
     def emit(self, signal: str, **fields: Any) -> None:

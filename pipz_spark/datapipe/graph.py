@@ -90,6 +90,11 @@ def _ord_lt(d1: Column, n1: Column, d2: Column, n2: Column) -> Column:
     return (d1 < d2) | ((d1 == d2) & (n1 < n2))
 
 
+def _ident(name: str) -> str:
+    """A caller-named column, backquoted with its backticks doubled."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _directed_front(
     edges: DataFrame,
     src_col: str,
@@ -117,8 +122,8 @@ def _directed_front(
     weight) through the same projection so the scan reads once."""
     a, b = out
     return edges.select(
-        F.col(src_col).alias(a), F.col(dst_col).alias(b), *extra
-    ).where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
+        F.col(_ident(src_col)).alias(a), F.col(_ident(dst_col)).alias(b), *extra
+    ).where(F.col(a).isNotNull() & F.col(b).isNotNull())
 
 
 def _node_universe(e: DataFrame, a: str = "_src", b: str = "_dst") -> DataFrame:
@@ -242,7 +247,7 @@ def pagerank(
     wcols = (
         ()
         if weight_col is None
-        else (F.col(weight_col).cast("long").alias("_w"),)
+        else (F.col(_ident(weight_col)).cast("long").alias("_w"),)
     )
     e = _directed_front(edges, src_col, dst_col, extra=wcols)
     if weight_col is not None:
@@ -404,10 +409,7 @@ def _pagerank_sql(
     edges.createOrReplaceTempView(ev)
     views = [ev]
 
-    def ident(name: str) -> str:  # backquoted, backticks doubled
-        return "`" + name.replace("`", "``") + "`"
-
-    s, d = ident(src_col), ident(dst_col)
+    s, d = _ident(src_col), _ident(dst_col)
     try:
         if weight_col is None:
             e_cte = (
@@ -420,7 +422,7 @@ def _pagerank_sql(
             # the loop form's order exactly
             e_cte = (
                 f"e AS (SELECT * FROM (SELECT {s} AS _src, {d} AS _dst, "
-                f"CAST({ident(weight_col)} AS BIGINT) AS _w FROM {ev} "
+                f"CAST({_ident(weight_col)} AS BIGINT) AS _w FROM {ev} "
                 f"WHERE {s} IS NOT NULL AND {d} IS NOT NULL) "
                 f"WHERE _w IS NOT NULL AND _w > 0)"
             )
@@ -788,8 +790,8 @@ def propagate_min_labels(
     if checkpoint_every is not None and checkpoint_every <= 0:
         raise ValueError(f"need checkpoint_every > 0, got {checkpoint_every}")
     e = edges.select(
-        F.col(src_col).alias("_s"), F.col(dst_col).alias("_d")
-    ).where(F.col(src_col).isNotNull() & F.col(dst_col).isNotNull())
+        F.col(_ident(src_col)).alias("_s"), F.col(_ident(dst_col)).alias("_d")
+    ).where(F.col("_s").isNotNull() & F.col("_d").isNotNull())
     sym = e.union(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d")))
     nodes = sym.select(F.col("_s").alias("node")).distinct()
     labels = nodes.withColumn("label", F.col("node"))
@@ -1556,8 +1558,8 @@ def bfs_hops(
     if symmetric:
         e = e.union(e.select(F.col("_d").alias("_s"), F.col("_s").alias("_d")))
     dist = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .where(F.col(seed_col).isNotNull())
+        seeds.select(F.col(_ident(seed_col)).alias("node"))
+        .where(F.col("node").isNotNull())
         .distinct()
         .withColumn("hops", F.lit(0).cast("long"))
     )
@@ -1725,7 +1727,7 @@ def sssp_cost(
         src_col,
         dst_col,
         out=("_s", "_d"),
-        extra=(F.col(weight_col).cast("long").alias("_w"),),
+        extra=(F.col(_ident(weight_col)).cast("long").alias("_w"),),
     ).where(F.col("_w").isNotNull() & (F.col("_w") > 0))
     if symmetric:
         e = e.union(
@@ -1734,8 +1736,8 @@ def sssp_cost(
             )
         )
     dist = (
-        seeds.select(F.col(seed_col).alias("node"))
-        .where(F.col(seed_col).isNotNull())
+        seeds.select(F.col(_ident(seed_col)).alias("node"))
+        .where(F.col("node").isNotNull())
         .distinct()
         .withColumn("cost", F.lit(0).cast("long"))
     )

@@ -304,27 +304,20 @@ def python_map_batches(
 ) -> Callable[[DataFrame], DataFrame]:
     """Whole-batch escape hatch over ``mapInPandas`` for reshaping
     transforms (explode-like, model inference). ``fn(pdf) -> pdf``
-    runs per Arrow batch; a batch-level exception is LOGGED (executor
-    stderr, logger ``pipz_spark.udf``) and the batch yields zero rows
-    rather than failing the task (log-and-drop is the only batch-safe
-    policy; per-row capture belongs in python_apply). A silent drop
-    left nothing to bisect when a job lost rows (r7 review finding)."""
+    runs per Arrow batch. A batch-level exception fails the task, and
+    so the action, like any other executor error, carrying a note that
+    names this transform: rows have no error column to carry it here,
+    and dropping the batch would lose its rows silently. Per-row
+    capture belongs in python_apply."""
 
     def gen(batches: Iterator["object"]) -> Iterator["object"]:
-        import logging
-
-        log = logging.getLogger("pipz_spark.udf")
         for pdf in batches:
             try:
-                yield fn(pdf)
-            except Exception as e:  # noqa: BLE001
-                log.warning(
-                    "python_map_batches %s: dropped a %d-row batch: %s",
-                    name,
-                    len(pdf),
-                    sanitize_message(f"{type(e).__name__}: {e}"),
-                )
-                continue
+                out = fn(pdf)
+            except Exception as e:
+                e.add_note(f"in python_map_batches {name!r}")
+                raise
+            yield out
 
     def apply(df: DataFrame) -> DataFrame:
         return df.mapInPandas(gen, schema)

@@ -1,10 +1,11 @@
 """Writers + the dead-letter landing path (SURVEY §2.4 sinks).
 
 The reference has no sinks (users call APIs inside closures); an
-analytics engine needs durable ones. ``write_split`` is the canonical
-terminal action: ONE computation of the pipeline output lands happy
-rows AND the dead-letter (flattened error struct) — the persistent
-form of Handle's observation pattern (handle.go:69-120).
+analytics engine needs durable ones. ``_land``, shared by
+``write_split`` and ``run_step_stream``, is the ONE landing path: one
+computation lands happy rows AND dead letters, and ``write_split``'s
+row counts ride its own ok write — the persistent form of Handle's
+observation pattern (handle.go:69-120).
 
 Scale notes: writers take partition_by for layout-aware placement
 (partition pruning on read is free scan reduction at 100 TB);
@@ -13,7 +14,9 @@ DLQ is queryable without knowing the engine's struct."""
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..control import signals as S
@@ -62,6 +65,50 @@ def flatten_dead_letter(df: DataFrame) -> DataFrame:
     ).drop(ERROR_COL)
 
 
+def _count_columns() -> tuple:
+    return (
+        F.count_if(is_ok()).alias("ok"),
+        F.count_if(is_failed()).alias("dead_letter"),
+    )
+
+
+def _land(
+    df: DataFrame,
+    ok_sink: Callable[[DataFrame], None],
+    dead_letter_sink: Callable[[DataFrame], None] | None = None,
+    count: str | None = None,
+) -> dict[str, int] | None:
+    """Land ok rows (error column dropped) to ``ok_sink``, then failed
+    rows (error struct kept) to ``dead_letter_sink``; return the
+    ``ok``/``dead_letter`` row counts if ``count`` names a way.
+
+    ``"observe"`` reads them off the ok sink's action, at no job of its
+    own, so only for a sink whose FIRST action scans its whole frame:
+    a partial one (``isEmpty``) fills the Observation with partial
+    counts, and none (a skipped write) leaves its read waiting forever.
+    ``"aggregate"`` runs one aggregate job after the sinks. The frame
+    is persisted only for a second consumer (a dead-letter sink or
+    that aggregate)."""
+    df = ensure_error_column(df)
+    obs = None
+    if count == "observe":
+        obs = Observation()
+        df = df.observe(obs, *_count_columns())
+    shared = dead_letter_sink is not None or count == "aggregate"
+    if shared:
+        df = df.persist()
+    try:
+        ok_sink(df.where(is_ok()).drop(ERROR_COL))
+        if dead_letter_sink is not None:
+            dead_letter_sink(df.where(is_failed()))
+        if count == "aggregate":
+            return df.agg(*_count_columns()).first().asDict()
+    finally:
+        if shared:
+            df.unpersist()
+    return None if obs is None else obs.get
+
+
 def write_split(
     df: DataFrame,
     ok_path: str,
@@ -71,26 +118,28 @@ def write_split(
     name: str = "write-split",
     bus: S.SignalBus = S.BUS,
 ) -> dict[str, int]:
-    """Terminal action: persist once, write happy path + dead letter.
+    """Terminal action: land the happy path and, given a path, the
+    flattened dead letter through ``_land``.
 
-    Returns row counts per side (the counts come from the SAME
-    persisted computation the writes used — no recompute), and emits
-    ``sequence.completed`` with them — the terminal action is where a
-    batch pipeline's completion becomes observable (signals.go's
-    sequence.completed, at the only point counts exist for free)."""
-    df = ensure_error_column(df).persist()
-    try:
-        ok = df.where(is_ok()).drop(ERROR_COL)
-        write_parquet(ok, ok_path, mode=mode, partition_by=partition_by)
-        counts = {"ok": ok.count()}
-        if dead_letter_path is not None:
-            dead = flatten_dead_letter(df)
-            write_parquet(dead, dead_letter_path, mode=mode)
-            counts["dead_letter"] = dead.count()
-        bus.emit(S.SEQUENCE_COMPLETED, name=name, **counts)
-        return counts
-    finally:
-        df.unpersist()
+    Returns row counts per side (``dead_letter`` only with a
+    dead-letter path), read off the ok write at no Spark job (one
+    aggregate job under ``mode="ignore"``, which may skip the write),
+    and emits ``sequence.completed`` with them — the terminal action
+    is where a batch pipeline's completion becomes observable."""
+
+    def write_dead(dead: DataFrame) -> None:
+        write_parquet(flatten_dead_letter(dead), dead_letter_path, mode=mode)
+
+    counts = _land(
+        df,
+        lambda ok: write_parquet(ok, ok_path, mode=mode, partition_by=partition_by),
+        None if dead_letter_path is None else write_dead,
+        "aggregate" if mode.lower() == "ignore" else "observe",
+    )
+    if dead_letter_path is None:
+        del counts["dead_letter"]
+    bus.emit(S.SEQUENCE_COMPLETED, name=name, **counts)
+    return counts
 
 
 def write_bucketed(

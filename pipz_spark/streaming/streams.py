@@ -12,6 +12,7 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable, Iterator, Mapping
+from functools import partial
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -19,11 +20,11 @@ from pyspark.sql import functions as F
 from .._scratch import scratch_dir
 from pyspark.sql import types as T
 
-from ..core.caches import release_caches, track
-from ..core.errors import ERROR_COL, is_failed, is_ok
+from ..core.caches import release_caches
 from ..core.step import Step
 from ..control import signals as S
 from ..control.resilience import CircuitBreaker, RateLimiter
+from ..sources.sinks import _land
 
 def read_events_stream(
     spark: SparkSession,
@@ -398,16 +399,19 @@ def run_step_stream(
     RateLimiter (the reference's operational connectors in their
     streaming home, SURVEY §1.5). Returns the StreamingQuery.
 
-    The batch is persisted ONLY when it has multiple consumers (a
-    dead-letter sink, or direct SEQUENCE_COMPLETED subscribers whose
-    counts cost extra actions); with a single sink the plan is
-    consumed once and persisting would bill a storage materialization
-    to every trigger for nothing. Consequently ``ok_sink`` is assumed
-    to run ONE action over the frame — a sink that runs several
-    (count + write, multi-format landing) should persist/unpersist
-    inside itself. Breaker-open or limiter-drop raises inside
-    foreachBatch → the micro-batch fails and Spark retries/stops per
-    its policy, which is exactly the fail-fast contract.
+    Each batch lands through ``write_split``'s landing (``_land``),
+    persisted ONLY for a second consumer: a single sink consumes the
+    plan once, and persisting would bill a storage materialization to
+    every trigger for nothing. Each sink is assumed to run ONE action
+    over its frame — a sink that runs several (count + write) should
+    persist/unpersist inside itself. The sinks are caller code that
+    may run a partial action or none for a count to ride, so the
+    batch's ok/dead-letter counts are one aggregate job (the second
+    consumer), run only for listeners that NAME ``sequence.completed``;
+    an ``on_any``-only audience gets them as None (DIVERGENCES #11).
+    Breaker-open or limiter-drop raises inside foreachBatch → the
+    micro-batch fails and Spark retries/stops per its policy, which
+    is exactly the fail-fast contract.
 
     When a ``checkpoint`` is given, breaker/limiter state is persisted
     into it after every micro-batch (tripped state included — the
@@ -426,72 +430,29 @@ def run_step_stream(
             if limiter is not None and "limiter" in snap:
                 limiter.restore(snap["limiter"])
 
+    def guard(action: Callable[[], None]) -> None:
+        if limiter is not None:
+            action = partial(limiter.call, action)
+        if breaker is not None:
+            action = partial(breaker.call, action)
+        action()
+
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        out = step.apply(batch_df, ())
-        # persist only when the batch has MULTIPLE consumers (ok +
-        # dead-letter sinks, or signal counts) — a single-sink stream
-        # consumes the plan exactly once, and persisting it would bill
-        # a storage-memory materialization to every trigger for
-        # nothing. DIRECT listeners only: an on_any-only audience gets
-        # the count-free emission (DIVERGENCES #11), which consumes
-        # nothing, so it must not trigger the persist either.
-        # evaluated ONCE per batch and reused by the emission gate
-        # below: a listener registered mid-batch must not flip the
-        # count emission on after the persist decision already said no
-        # (the counts would re-execute the whole pipeline twice)
-        direct_counts = bus.has_direct_listeners(S.SEQUENCE_COMPLETED)
-        multi_consumer = dead_letter_sink is not None or direct_counts
-        if multi_consumer:
-            out = track(out.persist())
         try:
-            ok = out.where(is_ok()).drop(ERROR_COL)
-            dead = out.where(is_failed())
-
-            def write_ok() -> None:
-                ok_sink(ok, batch_id)
-
-            action = write_ok
-            if limiter is not None:
-                inner = action
-
-                def limited() -> None:
-                    limiter.call(inner)
-
-                action = limited
-            if breaker is not None:
-                inner2 = action
-
-                def guarded() -> None:
-                    breaker.call(inner2)
-
-                action = guarded
-            action()
-            if dead_letter_sink is not None:
-                dead_letter_sink(dead, batch_id)
-            # per-micro-batch completion signal; the counts cost two
-            # extra actions on the persisted batch, so they run only
-            # for subscribers that NAME the signal — a generic on_any
-            # logger must not add count() jobs to every trigger
-            # (DIVERGENCES #11, same gate as handle). Reuses the
-            # batch-start snapshot so the decision matches the persist.
-            if direct_counts:
+            counts = _land(
+                step.apply(batch_df, ()),
+                lambda ok: guard(lambda: ok_sink(ok, batch_id)),
+                None
+                if dead_letter_sink is None
+                else lambda dead: dead_letter_sink(dead, batch_id),
+                "aggregate" if bus.has_direct_listeners(S.SEQUENCE_COMPLETED) else None,
+            )
+            if bus.has_listeners(S.SEQUENCE_COMPLETED):
                 bus.emit(
                     S.SEQUENCE_COMPLETED,
                     name=query_name,
                     batch_id=batch_id,
-                    ok=ok.count(),
-                    dead_letter=dead.count(),
-                )
-            elif bus.has_listeners(S.SEQUENCE_COMPLETED):
-                # on_any-only audience: the completion event stays
-                # visible, just without the count fields that would
-                # cost two extra actions per trigger
-                bus.emit(
-                    S.SEQUENCE_COMPLETED,
-                    name=query_name,
-                    batch_id=batch_id,
-                    ok=None,
-                    dead_letter=None,
+                    **(counts or {"ok": None, "dead_letter": None}),
                 )
         finally:
             # persist operational state whether the batch succeeded or
@@ -504,9 +465,9 @@ def run_step_stream(
                 if limiter is not None:
                     persisted["limiter"] = limiter.snapshot()
                 state_store.save(persisted)
-            # free every frame this batch tracked (the batch persist,
-            # Step and operator caches) once its sinks are done, or a
-            # long-running stream accumulates cached blocks
+            # free every frame this batch tracked (Step and operator
+            # caches) once its sinks are done, or a long-running stream
+            # accumulates cached blocks
             release_caches()
 
     writer = stream.writeStream.foreachBatch(process).queryName(query_name)

@@ -4463,6 +4463,31 @@ def test_pagerank_sql_path_quotes_backtick_column_names(spark):
     assert loop == _ref_wpagerank(wedges, 3)
 
 
+
+def test_pagerank_loop_quotes_backtick_column_names(spark):
+    """The fluent loop (taken under checkpoint_every) resolves
+    caller-named columns through the same quoting as the SQL path, so
+    a weight column whose name holds a backtick ranks the graph
+    exactly as the SQL path does."""
+    from pipz_spark.datapipe import pagerank
+
+    wedges = [
+        ("a", "b", 3), ("a", "c", 1), ("b", "c", 2), ("c", "a", 5),
+        ("c", "d", 1), ("d", "a", 4), ("a", "d", 0), ("b", "d", None),
+    ]
+    ticked = spark.createDataFrame(wedges, "src string, dst string, w long").toDF(
+        "s`rc", "d`st", "w`t"
+    )
+    cols = dict(src_col="s`rc", dst_col="d`st", weight_col="w`t")
+
+    def ranks(**kw):
+        return {
+            r["node"]: (r["rank_q"], r["outdeg"])
+            for r in pagerank(ticked, iters=3, **cols, **kw).collect()
+        }
+
+    assert ranks(checkpoint_every=3) == ranks() == _ref_wpagerank(wedges, 3)
+
 def test_pagerank_falls_back_to_loop_under_lowered_analyzer_cap(spark):
     """A session that lowers spark.sql.analyzer.maxIterations below
     what the SQL path's WITH chain needs still ranks: the SQL path's

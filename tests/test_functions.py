@@ -1,8 +1,11 @@
-"""UDF escape hatch: exceptions become error rows, never task failures."""
+"""UDF escape hatch: per-row exceptions become error rows, never task
+failures; a whole-batch ``python_map_batches`` failure fails the action."""
 
 from __future__ import annotations
 
 import json
+
+import pytest
 
 from pyspark.sql import functions as F
 
@@ -68,6 +71,20 @@ def test_python_map_batches_reshape(documents):
     assert out.count() == documents.count() * 3
     assert set(out.columns) == {"doc_id", "pos", "token"}
 
+
+
+def test_python_map_batches_fails_the_action_on_a_failed_batch(spark):
+    # a raising batch must surface as a failed action, never as a
+    # result that is silently short of that batch's rows
+    def fn(pdf):
+        if (pdf["id"] == 7).any():
+            raise ValueError("bad batch")
+        return pdf
+
+    apply = python_map_batches("strict", fn, "id long")
+    with pytest.raises(Exception, match="bad batch") as failed:
+        apply(spark.range(0, 20, numPartitions=4)).collect()
+    assert "in python_map_batches 'strict'" in str(failed.value)
 
 def test_python_apply_row_deadline(spark):
     # timeout.go:61-154 at its native granularity: a hung closure
