@@ -124,8 +124,8 @@ def winner_labels(attempts, condition=None) -> dict[str, Column]:
         q = a.ok() if condition is None else (a.ok() & condition(a.updates))
         q = F.coalesce(q, F.lit(False))
         # already-errored rows never reach the winner chain
-        # (_first_qualifying wraps it in when(is_ok(), ...)) — keep
-        # the observed counts identical to the actual routing
+        # (_first_qualifying stages no winner for them) — keep the
+        # observed counts identical to the actual routing
         labels[a.name] = is_ok() & q & ~prior
         prior = prior | q
     return labels

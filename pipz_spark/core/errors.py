@@ -47,10 +47,6 @@ ERROR_SCHEMA = T.StructType(
 )
 
 
-def error_col(df: DataFrame | None = None) -> Column:
-    return F.col(ERROR_COL)
-
-
 def is_ok() -> Column:
     """Row is on the happy path (no upstream Step failed it)."""
     return F.col(ERROR_COL).isNull()

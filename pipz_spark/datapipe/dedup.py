@@ -26,6 +26,7 @@ from ..core.caches import track
 from ..core.errors import ERROR_COL, ensure_error_column, is_ok
 from .text import WS
 from ..core.step import Step
+from ..operators.processors import _guarded
 
 _MAXLONG = (1 << 63) - 1
 
@@ -209,7 +210,7 @@ def minhash_signature(
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
         sig = _minhash_expr(char_shingles(F.col(text_col), shingle_k), num_hashes)
-        return df.withColumn("minhash", F.when(is_ok(), sig))
+        return _guarded(df, {"minhash": sig})
 
     return Step(name, fn, node_type="minhash", metadata={"num_hashes": num_hashes})
 
@@ -907,7 +908,7 @@ def simhash(name: str = "simhash", text_col: str = "text") -> Step:
     """Attach a 63-bit ``simhash`` column."""
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        return df.withColumn("simhash", F.when(is_ok(), _simhash_expr(F.col(text_col))))
+        return _guarded(df, {"simhash": _simhash_expr(F.col(text_col))})
 
     return Step(name, fn, node_type="simhash")
 

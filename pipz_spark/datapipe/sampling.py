@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 
 from ..core.errors import ERROR_COL, ensure_error_column, is_ok, null_error
 from ..core.step import Step
+from ..operators.processors import _guarded
 
 _BUCKETS = 10_000
 
@@ -60,7 +61,7 @@ def deterministic_split(
                 cum += frac
                 chain = chain.when(bucket < int(round(cum * _BUCKETS)), F.lit(label))  # type: ignore[assignment]
             expr = chain.otherwise(expr)  # type: ignore[union-attr]
-        return df.withColumn(output, F.when(is_ok(), expr))
+        return _guarded(df, {output: expr})
 
     return Step(
         name, fn, node_type="split", metadata={"fractions": dict(fractions)}

@@ -29,19 +29,17 @@ from __future__ import annotations
 from collections.abc import Callable, Mapping, Sequence as Seq
 from dataclasses import dataclass, field
 from functools import reduce as _reduce
-from itertools import count as _count
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..core.caches import track
-from ..core.errors import ERROR_COL, is_ok, make_error
+from ..core.errors import ERROR_COL, is_failed, is_ok, make_error
 from ..core.step import Step, identity_step
-from .processors import _guarded, _resolve, transform, Updates
+from .processors import _guarded, _obs_name, _resolve, transform, Updates
 
 _ROUTE = "_pipz_route"
 _WINNER = "_pipz_winner"
-_obs_seq = _count()  # salts observation names (unique per plan)
 
 
 class Sequence(Step):
@@ -118,6 +116,20 @@ def sequence(name: str, *steps: Step) -> Sequence:
     return Sequence(name, *steps)
 
 
+def _first_arm(
+    df: DataFrame, arms: Seq[tuple[Column, Mapping[str, Column]]]
+) -> dict[str, Column]:
+    """Per updated column, a CASE chain over ``(hit, updates)`` arms in
+    order: the first arm that hits and sets the column wins. An existing
+    column keeps its value where none does; a new one is NULL there."""
+    chains: dict[str, Column] = {}
+    for hit, arm in arms:
+        for col, expr in arm.items():
+            chains[col] = (chains[col] if col in chains else F).when(hit, expr)  # type: ignore[union-attr]
+    cols = set(df.columns)
+    return {c: ch.otherwise(F.col(c)) if c in cols else ch for c, ch in chains.items()}
+
+
 def switch(
     name: str,
     route_key: Column,
@@ -130,12 +142,16 @@ def switch(
     Two compilation modes:
 
     * **Expression mode** (all branches are Updates mappings, the
-      preferred shape at 100 TB): the entire switch compiles to ONE
+      preferred shape at 100 TB): the entire switch is ONE guarded
       projection over ONE scan — per output column a chained
-      ``when(route == k, branch_expr)`` with input-passthrough as the
-      final otherwise. This is the exact mapping SURVEY §2.2 C2
-      prescribes; no unions, no re-scans, whole-stage codegen fuses it
-      with neighboring steps.
+      ``when(route_key <=> k, branch_expr)``, with input-passthrough as
+      the final otherwise of an existing column. This is the exact
+      mapping SURVEY §2.2 C2 prescribes; no unions, no re-scans,
+      whole-stage codegen fuses it with neighboring steps. A bare
+      column key is read inline by every arm; any computed key is
+      staged as one column first, so it is evaluated once per row and
+      every arm and column agree on it (a ``rand()`` key stays one
+      draw per row).
     * **Step mode** (any branch is a heavyweight Step, e.g. one doing
       its own join): filter-split per route + unionByName, with the
       routed input persisted so the k branch filters read the input
@@ -149,31 +165,21 @@ def switch(
         default, Step
     )
 
+    # a bare column is read inline by every arm; a computed key is staged
+    staged = expr_mode and (
+        route_key._jc.node().getClass().getSimpleName() != "UnresolvedAttribute"
+    )
+
     def fn_expr(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        keys = list(branches.keys())
-        resolved = {k: _resolve(b, df) for k, b in branches.items()}
-        default_updates = _resolve(default, df) if default is not None else {}
+        key = F.col(_ROUTE) if staged else route_key
+        arms = [(key.eqNullSafe(F.lit(k)), _resolve(b, df)) for k, b in branches.items()]
+        if default is not None:
+            no_match = ~F.coalesce(key.isin(list(branches)), F.lit(False))
+            arms.append((no_match, _resolve(default, df)))
+        if not staged:
+            return _guarded(df, _first_arm(df, arms))
         routed = df.withColumn(_ROUTE, route_key)
-        target_cols = list(
-            dict.fromkeys(
-                [c for u in resolved.values() for c in u]
-                + list(default_updates.keys())
-            )
-        )
-        no_match = ~F.coalesce(F.col(_ROUTE).isin(keys), F.lit(False))
-        updates: dict[str, Column] = {}
-        for col in target_cols:
-            chain = F
-            for k in keys:
-                if col in resolved[k]:
-                    chain = chain.when(
-                        F.col(_ROUTE).eqNullSafe(F.lit(k)), resolved[k][col]
-                    )
-            if col in default_updates:
-                chain = chain.when(no_match, default_updates[col])
-            passthrough = F.col(col) if col in df.columns else F.lit(None)
-            updates[col] = chain.otherwise(passthrough)  # type: ignore[union-attr]
-        return _guarded(routed, updates).drop(_ROUTE)
+        return _guarded(routed, _first_arm(df, arms)).drop(_ROUTE)
 
     def fn_steps(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
         # Heavyweight-branch mode: persist the routed input so the k+1
@@ -215,21 +221,13 @@ def filter_if(name: str, condition: Column, child: Step | Updates) -> Step:
     This is the reference's Filter (filter.go:94-97) — NOT row
     elimination. (Row-dropping selection is plain ``where_rows``.)
 
-    Expression-shaped children (Updates) compile to a single
-    ``when(cond, expr).otherwise(col)`` projection — one scan, no
-    union. Step children fall back to filter-split + union.
+    Expression-shaped children (Updates) compile to one guarded
+    projection — one scan, no union. Step children fall back to
+    filter-split + union.
     """
 
     def fn_expr(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        hit = F.coalesce(condition, F.lit(False))
-        resolved = _resolve(child, df)  # type: ignore[arg-type]
-        updates = {
-            col: F.when(hit, expr).otherwise(
-                F.col(col) if col in df.columns else F.lit(None)
-            )
-            for col, expr in resolved.items()
-        }
-        return _guarded(df, updates)
+        return _guarded(df, _resolve(child, df), when=condition)  # type: ignore[arg-type]
 
     def fn_step(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
         # null-safe: a NULL condition counts as "no hit" (row passes through)
@@ -278,7 +276,7 @@ def _first_qualifying(
     qualifies, the row errors and keeps its original values
     (contest.go:174-189).
 
-    NULL qualification predicates coalesce to False so every row
+    NULL qualification predicates count as False so every row
     deterministically ends up with a result or an error — the
     reference is total.
 
@@ -288,31 +286,18 @@ def _first_qualifying(
     """
     if not attempts:
         raise ValueError(f"{node_type} '{name}' needs at least one attempt")
-    target_cols: list[str] = list(
-        dict.fromkeys(c for a in attempts for c in a.updates)
-    )
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        quals = [F.coalesce(qualifies(a), F.lit(False)) for a in attempts]
-        winner_chain = F
-        for i, q in enumerate(quals):
-            winner_chain = winner_chain.when(q, F.lit(i))  # type: ignore[assignment]
-        winner = winner_chain.otherwise(F.lit(None).cast("int"))  # type: ignore[union-attr]
-        df = df.withColumn(_WINNER, F.when(is_ok(), winner))
-        updates: dict[str, Column] = {}
-        for col in target_cols:
-            chain = F
-            for i, a in enumerate(attempts):
-                if col in a.updates:
-                    chain = chain.when(F.col(_WINNER) == i, a.updates[col])  # type: ignore[assignment]
-            passthrough = F.col(col) if col in df.columns else F.lit(None)
-            updates[col] = chain.otherwise(passthrough)  # type: ignore[union-attr]
+        # the winner is staged once per row so every column and the
+        # error agree on it; failed rows never evaluate the attempts
+        winner_chain = F.when(is_failed(), F.lit(None))
+        for i, a in enumerate(attempts):
+            winner_chain = winner_chain.when(qualifies(a), F.lit(i))
+        won = F.col(_WINNER)
+        updates = _first_arm(df, [(won == i, a.updates) for i, a in enumerate(attempts)])
         err = make_error(list(path), all_fail_message)
-        df = df.withColumn(
-            ERROR_COL,
-            F.when(is_ok() & F.col(_WINNER).isNull(), err).otherwise(F.col(ERROR_COL)),
-        )
-        return _guarded(df, updates).drop(_WINNER)
+        staged = df.withColumn(_WINNER, winner_chain)
+        return _guarded(staged, updates, fail_when=won.isNull(), error=err).drop(_WINNER)
 
     return Step(
         name,
@@ -387,14 +372,14 @@ def concurrent(
                     # the observed completion counts must match what
                     # actually executed (r7 review finding)
                     df = df.observe(
-                        f"{name}/{b}#{next(_obs_seq)}",
+                        _obs_name(f"{name}/{b}"),
                         *[
                             F.count(F.when(is_ok(), expr)).alias(k)
                             for k, expr in updates.items()
                         ],
                     )
             return df
-        return _guarded(df, dict(reducer(resolved)))
+        return _guarded(df, reducer(resolved))
 
     return Step(
         name,

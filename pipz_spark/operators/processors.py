@@ -9,9 +9,11 @@ Mirrors reference semantics:
 
 Spark-first design: a "user function" here is a dict of named Column
 expressions (``{"col": expr}``) — the declarative analog of a Go
-closure over a struct. Everything compiles to ``withColumns`` guarded
-by ``error IS NULL`` (the per-row fail-fast short-circuit), which
-Catalyst fuses into a single whole-stage-codegen projection: the
+closure over a struct. Every column-only step (here and in the
+expression-mode connectors) compiles through ``_guarded`` to one
+``withColumns`` guarded by ``error IS NULL`` (the per-row fail-fast
+short-circuit); a failed row keeps its pre-step values. Catalyst fuses
+those into a single whole-stage-codegen projection: the
 distributed analog of the reference's zero-allocation hot path
 (api.go:277-284). Arbitrary Python (the true closure escape hatch) is
 supported via pandas UDFs in pipz_spark.functions.udf — the slow
@@ -32,8 +34,13 @@ from ..core.identity import Identity
 from ..core.step import Step
 from .relational import orderable
 
-_obs_seq = _count()  # salts observation names so two same-named
-# effects in one plan don't collide at analysis time
+_obs_seq = _count()  # one counter for every observation name this
+# layer mints, so two same-named observations in one plan don't collide
+
+
+def _obs_name(name: str) -> str:
+    return f"{name}#{next(_obs_seq)}"
+
 
 # Updates may be given as a static mapping or lazily as fn(df) -> mapping
 Updates = Mapping[str, Column] | Callable[[DataFrame], Mapping[str, Column]]
@@ -47,20 +54,37 @@ def _resolve(updates: Updates | None, df: DataFrame) -> dict[str, Column]:
     return dict(updates)
 
 
-def _guarded(df: DataFrame, updates: dict[str, Column]) -> DataFrame:
-    """Apply column updates only to happy-path rows.
+def _guarded(
+    df: DataFrame,
+    updates: Mapping[str, Column],
+    when: Column | None = None,
+    fail_when: Column | None = None,
+    error: Column | None = None,
+) -> DataFrame:
+    """The one guarded projection every column-only Step compiles to.
 
-    Existing columns keep their old value on errored rows; new columns
-    are NULL there. One withColumns call = one projection.
+    Ok rows where ``fail_when`` holds get ``error`` and keep their
+    pre-step values; every other ok row takes ``updates`` where ``when``
+    holds (NULL counts as false). Failed rows and misses keep existing
+    columns; a new column is NULL there. One ``withColumns`` (one
+    ``Project``), every expression over the input row.
     """
-    if not updates:
+    if not updates and fail_when is None:
         return df
+    ok = is_ok()
     out: dict[str, Column] = {}
-    for name, expr in updates.items():
-        if name in df.columns:
-            out[name] = F.when(is_ok(), expr).otherwise(F.col(name))
-        else:
-            out[name] = F.when(is_ok(), expr)
+    if fail_when is not None:
+        out[ERROR_COL] = F.when(ok & fail_when, error).otherwise(F.col(ERROR_COL))
+    if updates:
+        hit = ok if fail_when is None else ok & ~F.coalesce(fail_when, F.lit(False))
+        if when is not None:
+            hit = hit & when
+        cols = set(df.columns)
+        for name, expr in updates.items():
+            upd = F.when(hit, expr)
+            out[name] = upd.otherwise(F.col(name)) if name in cols else upd
+    if len(out) == 1:  # one Project either way; withColumns costs ~10 more py4j calls
+        return df.withColumn(*out.popitem())
     return df.withColumns(out)
 
 
@@ -93,17 +117,16 @@ def apply(
     reference zeroes the value on failure; here the row keeps its
     pre-step columns and is excluded from the happy path — same
     observable pipeline behavior, NULL-friendly instead of
-    zero-value-friendly.
+    zero-value-friendly. The error and the updates are one projection,
+    each testing ``error_when``: a nondeterministic one (``rand()``)
+    must be staged as a column first so they agree.
     """
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        if error_when is not None:
-            err = make_error(list(path), message, timeout=timeout, canceled=canceled)
-            df = df.withColumn(
-                ERROR_COL,
-                F.when(is_ok() & error_when, err).otherwise(F.col(ERROR_COL)),
-            )
-        return _guarded(df, _resolve(updates, df))
+        err = None if error_when is None else make_error(
+            list(path), message, timeout=timeout, canceled=canceled
+        )
+        return _guarded(df, _resolve(updates, df), fail_when=error_when, error=err)
 
     return Step(name, fn, node_type="apply")
 
@@ -142,14 +165,10 @@ def effect(
             if observation is not None:
                 df = df.observe(observation, *aggs)
             else:
-                df = df.observe(f"{name}#{next(_obs_seq)}", *aggs)
-        if error_when is not None:
-            err = make_error(list(path), message)
-            df = df.withColumn(
-                ERROR_COL,
-                F.when(is_ok() & error_when, err).otherwise(F.col(ERROR_COL)),
-            )
-        return df
+                df = df.observe(_obs_name(name), *aggs)
+        if error_when is None:
+            return df
+        return _guarded(df, {}, fail_when=error_when, error=make_error(list(path), message))
 
     return Step(name, fn, node_type="effect")
 
@@ -166,14 +185,7 @@ def mutate(
     """
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        resolved = _resolve(updates, df)
-        conditional = {
-            col: F.when(condition, expr).otherwise(
-                F.col(col) if col in df.columns else F.lit(None)
-            )
-            for col, expr in resolved.items()
-        }
-        return _guarded(df, conditional)
+        return _guarded(df, _resolve(updates, df), when=condition)
 
     return Step(Identity(name, description), fn, node_type="mutate")
 

@@ -31,8 +31,9 @@ from dataclasses import dataclass, field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..core.errors import ERROR_COL, is_ok, make_error, split_failed
+from ..core.errors import ERROR_COL, make_error, split_failed
 from ..core.step import Step
+from ..operators.processors import _guarded
 
 __all__ = [
     "ChaosAction",
@@ -133,24 +134,11 @@ class MockStep(Step):
             _time.sleep(self._delay)
         if self._raise is not None:
             raise RuntimeError(self._raise)
-        out = df
-        if self._updates:
-            guarded = {
-                col: F.when(is_ok(), expr).otherwise(
-                    F.col(col) if col in df.columns else F.lit(None)
-                )
-                for col, expr in self._updates.items()
-            }
-            out = out.withColumns(guarded)
-        if self._error_when is not None:
-            hit = is_ok() & F.coalesce(self._error_when, F.lit(False))
-            out = out.withColumn(
-                ERROR_COL,
-                F.when(hit, make_error(path, self._error_message)).otherwise(
-                    F.col(ERROR_COL)
-                ),
-            )
-        return out
+        out = _guarded(df, self._updates or {})
+        if self._error_when is None:
+            return out
+        err = make_error(path, self._error_message)
+        return _guarded(out, {}, fail_when=self._error_when, error=err)
 
 
 def chaos_step(
@@ -186,11 +174,7 @@ def chaos_step(
             F.conv(F.substring(F.md5(F.concat(key_str, F.lit(salt))), 1, 8), 16, 10)
             .cast("long") % 10000
         )
-        hit = is_ok() & (bucket < cut)
-        return df.withColumn(
-            ERROR_COL,
-            F.when(hit, make_error(path, message)).otherwise(F.col(ERROR_COL)),
-        )
+        return _guarded(df, {}, fail_when=bucket < cut, error=make_error(path, message))
 
     return Step(name, fn, node_type="chaos", metadata={"failure_rate": failure_rate})
 

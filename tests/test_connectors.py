@@ -456,3 +456,34 @@ def test_caches_tracked_under_timeout_belong_to_the_caller(spark):
     assert sc._jsc.getPersistentRDDs().size() > baseline
     assert release_caches() > 0
     assert sc._jsc.getPersistentRDDs().size() == baseline
+
+
+def test_effect_and_concurrent_mint_distinct_observation_names(spark, monkeypatch):
+    # an effect named "fan/left" and a concurrent "fan" with a branch
+    # "left" observe under the same base name; one counter for the whole
+    # operator layer keeps the names apart in a fresh process
+    from itertools import count
+
+    from pipz_spark.operators import connectors, processors
+
+    for mod in (processors, connectors):
+        if hasattr(mod, "_obs_seq"):
+            monkeypatch.setattr(mod, "_obs_seq", count())
+    step = P.sequence(
+        "s",
+        P.effect("fan/left", metrics={"n": F.count(F.lit(1))}),
+        P.concurrent("fan", {"left": {"m": F.col("id")}}),
+    )
+    assert step(spark.range(4)).count() == 4
+
+
+def test_switch_evaluates_a_computed_key_once_per_row(spark):
+    # a computed key is staged once per row; inlined into every arm it
+    # is redrawn per arm, and about a quarter of the rows match none
+    key = F.when(F.rand(7) < 0.5, F.lit("a")).otherwise(F.lit("b"))
+    step = P.switch("ab", key, {
+        "a": {"x": F.lit("a"), "y": F.lit("a")},
+        "b": {"x": F.lit("b"), "y": F.lit("b")},
+    })
+    out = step(spark.range(2000))
+    assert out.where(F.col("x").isNull() | (F.col("x") != F.col("y"))).count() == 0

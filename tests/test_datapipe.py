@@ -214,6 +214,33 @@ def test_minhash_signature_shape(documents):
     assert len(row["minhash"]) == 16
 
 
+def test_column_steps_keep_pre_step_values_on_dead_rows(spark):
+    # a dead-lettered row keeps its upstream error AND its pre-step
+    # value of an output column the step would otherwise overwrite
+    from pipz_spark import P
+    from pipz_spark.datapipe import deterministic_split
+
+    df = P.apply("up", error_when=F.col("doc_id") == 2)(
+        spark.createDataFrame(
+            [(1, "alpha beta gamma delta"), (2, "epsilon zeta eta theta")],
+            "doc_id long, text string",
+        )
+    ).select(
+        "*",
+        F.array(F.lit(7).cast("long")).alias("minhash"),
+        F.lit(7).cast("long").alias("simhash"),
+        F.lit("pre").alias("split"),
+    )
+    for step, col, pre in [
+        (minhash_signature(num_hashes=4), "minhash", [7]),
+        (simhash(), "simhash", 7),
+        (deterministic_split("tvt", "doc_id", {"train": 0.5, "test": 0.5}), "split", "pre"),
+    ]:
+        rows = {r["doc_id"]: r for r in step(df).collect()}
+        assert rows[2][col] == pre and rows[2]["_pipz_error"]["path"] == ["up"], col
+        assert rows[1][col] != pre and rows[1]["_pipz_error"] is None, col
+
+
 def test_simhash_near_dups(spark, documents):
     base = documents.limit(1).collect()[0]
     # identical text → hamming 0

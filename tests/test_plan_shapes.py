@@ -730,23 +730,7 @@ def test_corpus_cleaning_runs_its_udf_once_over_one_scan(spark, documents):
     # so the normalizer UDF ran six times per row over four scans.
     # "Scan parquet" also counts the scan printed inside an
     # InMemoryTableScan of the cached fixture.
-    from pipz_spark import P
-    from pipz_spark.datapipe import exact_dedup, lang_id, quality_score, token_count
-    from pipz_spark.functions import python_apply
-
-    gate = P.apply(
-        "quality-gate",
-        error_when=(F.col("n_tokens") < 5) | (F.col("quality") < 0.1),
-        message="low quality",
-    )
-    normalize = python_apply(
-        "normalize", lambda t: " ".join(t.split()), ["text"], "string", output="text_norm"
-    )
-    clean = P.sequence(
-        "clean", token_count(), quality_score(), gate, lang_id(), normalize,
-        exact_dedup(text_col="text_norm"),
-    )
-    plan = clean(documents)._jdf.queryExecution().executedPlan().toString()
+    plan = _cleaning_step()(documents)._jdf.queryExecution().executedPlan().toString()
     assert plan.count("ArrowEvalPython") == 1
     assert plan.count("Scan parquet") == 1
     assert plan.count("Exchange") == 1  # the dedup window's
@@ -768,3 +752,132 @@ def test_flat_map_expands_over_one_scan(spark, documents):
     assert plan.count("Scan parquet") == 1
     assert plan.count("EvalPythonUDTF") == 1
     assert "Union" not in plan
+
+
+def _projects(df) -> int:
+    return df._jdf.queryExecution().analyzed().toString().count("Project [")
+
+
+def _events_step():
+    # the events_stream benchmark's Step: apply + expression-mode switch
+    from pipz_spark import P
+
+    return P.sequence(
+        "events",
+        P.apply("json-valid", error_when=F.get_json_object("props", "$").isNull(),
+                message="malformed props"),
+        P.switch("route", F.col("event_type"), {
+            "click": {"weight": F.lit(1).cast("long")},
+            "view": {"weight": F.lit(0).cast("long")},
+            "purchase": {"weight": F.col("value"),
+                         "page": F.get_json_object("props", "$.page").cast("long")},
+        }),
+    )
+
+
+def _cleaning_step():
+    # the corpus_dedup benchmark's cleaning Sequence
+    from pipz_spark import P
+    from pipz_spark.datapipe import exact_dedup, lang_id, quality_score, token_count
+    from pipz_spark.functions import python_apply
+
+    gate = P.apply(
+        "quality-gate",
+        error_when=(F.col("n_tokens") < 5) | (F.col("quality") < 0.1),
+        message="low quality",
+    )
+    normalize = python_apply(
+        "normalize", lambda t: " ".join(t.split()), ["text"], "string", output="text_norm"
+    )
+    return P.sequence(
+        "clean", token_count(), quality_score(), gate, lang_id(), normalize,
+        exact_dedup(text_col="text_norm"),
+    )
+
+
+def test_every_column_only_step_is_one_guarded_projection(spark):
+    # each column-only Step lowers through one helper to ONE withColumns;
+    # race/contest/fallback stage their per-row winner, and a switch its
+    # computed key (one Project), and drop it again (another)
+    from pipz_spark import P
+    from pipz_spark.core.errors import ensure_error_column
+    from pipz_spark.datapipe import deterministic_split, minhash_signature, simhash
+    from pipz_spark.testing import MockStep, chaos_step
+
+    df = ensure_error_column(
+        spark.range(6).select("id", F.lit("a b c d e f").alias("text"),
+                              (F.col("id") % 3).cast("string").alias("k"))
+    )
+    A = P.Attempt
+    attempts = [A("one", {"v": F.col("id")}, fail_when=F.col("id") > 2),
+                A("two", {"v": F.col("id") * 2})]
+    one = {
+        "transform": P.transform("t", {"v": F.col("id") + 1}),
+        "apply": P.apply("a", {"v": F.col("id")}, error_when=F.col("id") > 4),
+        "effect": P.effect("e", error_when=F.col("id") > 4),
+        "mutate": P.mutate("m", {"id": F.col("id") + 1}, F.col("k") == "1"),
+        "filter_if": P.filter_if("f", F.col("k") == "1", {"v": F.lit(1)}),
+        "switch": P.switch("s", F.col("k"), {"0": {"v": F.lit(0)}, "1": {"w": F.lit(1)}},
+                           default={"v": F.lit(9)}),
+        "concurrent": P.concurrent("c", {"l": {"x": F.col("id")}},
+                                   reducer=lambda r: {"v": r["l"]["x"] * 2}),
+        "chaos": chaos_step("ch", failure_rate=0.5, key_col="id"),
+        "mock": MockStep("mk").with_updates({"v": F.lit(1)}),
+        "minhash": minhash_signature(num_hashes=4),
+        "simhash": simhash(),
+        "split": deterministic_split("sp", "id", {"a": 0.5, "b": 0.5}),
+    }
+    base = _projects(df)
+    for name, step in one.items():
+        assert _projects(step(df)) - base == 1, name
+    for step in (P.race("r", attempts), P.fallback("fb", attempts),
+                 P.contest("ct", lambda u: u["v"] > 1, attempts),
+                 P.switch("sk", F.upper(F.col("k")), {"0": {"v": F.lit(0)}})):
+        assert _projects(step(df)) - base == 3, step.name
+
+
+def test_events_step_analyzes_to_one_projection_per_step(events):
+    # error column + apply + switch; the switch stages no route column
+    out = _events_step()(events)
+    plan = out._jdf.queryExecution().analyzed().toString()
+    assert _projects(out) - _projects(events) == 3
+    assert "_pipz_route" not in plan
+
+
+def _round_trips(spark, monkeypatch, fn, reps: int = 3) -> int:
+    """py4j round trips of ``fn()``, the minimum over ``reps`` calls.
+    Collection is off while counting, so an object freed by an earlier
+    call (a py4j detach is a round trip too) lands in no later count."""
+    import gc
+
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    calls = [0]
+
+    def counting(*args, **kwargs):
+        calls[0] += 1
+        return send(*args, **kwargs)
+
+    monkeypatch.setattr(client, "send_command", counting)
+    seen = []
+    for _ in range(reps):
+        gc.collect()
+        gc.disable()
+        try:
+            calls[0] = 0
+            out = fn()
+            seen.append(calls[0])
+        finally:
+            gc.enable()
+        del out
+    monkeypatch.undo()
+    return min(seen)
+
+
+def test_reapply_round_trips_stay_bounded(spark, events, documents, monkeypatch):
+    # composing a Step is driver work paid on every apply (every
+    # trigger of a stream); the bounds are the counts measured before
+    # the column-only Steps shared one guarded projection
+    events_step, cleaning_step = _events_step(), _cleaning_step()
+    assert _round_trips(spark, monkeypatch, lambda: events_step.apply(events)) <= 487
+    assert _round_trips(spark, monkeypatch, lambda: cleaning_step.apply(documents)) <= 948

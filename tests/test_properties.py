@@ -3,7 +3,7 @@ model that must hold for ANY predicate/update combination."""
 
 from __future__ import annotations
 
-from hypothesis import HealthCheck, given, settings, strategies as st
+from hypothesis import HealthCheck, example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from pipz_spark import P, split_failed, split_ok
@@ -1344,6 +1344,13 @@ def test_kcenter_matches_replay_for_any_points(spark_prop, pts, k):
     ),
     k=st.integers(min_value=1, max_value=3),
 )
+# both sides score 0.10710043749999998 here; rounding the replay's
+# 12-place value again to 9 places lands on a tie, so compare at 12
+@example(
+    cands=[(0, 0, 0.0, [0.0, 0.0]), (1, 0, 0.0, [0.0, 0.0]),
+           (2, 0, 0.982421875, [0.3125, 0.375]), (2, 1, 1.0, [0.0, 1.0])],
+    k=2,
+)
 def test_mmr_matches_replay_for_any_candidates(spark_prop, cands, k):
     """mmr_rerank equals the pure-Python greedy replay for ANY small
     candidate set and k (zero-norm rows dropped on both sides)."""
@@ -1360,11 +1367,7 @@ def test_mmr_matches_replay_for_any_candidates(spark_prop, cands, k):
     )
     live = [r for r in rows if any(x != 0.0 for x in r[3])]
     got = {
-        (r["query_id"], r["doc_id"]): (r["mmr_rank"], round(r["mmr"], 9))
+        (r["query_id"], r["doc_id"]): (r["mmr_rank"], round(r["mmr"], 12))
         for r in mmr_rerank(df, k=k).collect()
     }
-    want = {
-        key: (rank, round(sc, 9))
-        for key, (rank, sc) in _ref_mmr(live, k).items()
-    }
-    assert got == want
+    assert got == _ref_mmr(live, k)
