@@ -5,8 +5,9 @@ generate the all-pairs cross product. The MinHash path is banded LSH:
 shingle → 120 minhashes → 24 bands of 5 → explode to (band, hash)
 buckets → in-bucket pair expansion (one aggregation, no self-join)
 → verify candidates with exact n-gram Jaccard. Hot buckets (boilerplate
-text) are capped so one degenerate bucket cannot quadratically blow
-up a partition — the standard skew guard for LSH joins.
+text) are split into fixed-size chunk cells so one degenerate bucket
+cannot quadratically blow up a partition — the standard skew guard
+for LSH joins.
 
 String work (shingling, base hashing) stays JVM-side in whole-stage
 codegen; the dense (a*h + b) mod p minima run as Arrow-batched numpy
@@ -217,123 +218,96 @@ def minhash_signature(
 
 def _bucket_pairs(bucketed: DataFrame, keys: list[str], max_bucket: int) -> DataFrame:
     """(id_a < id_b) pairs co-bucketed on ``keys``, EXHAUSTIVE and
-    skew-safe. One aggregation builds the sorted id list per bucket
-    (persisted — both size classes read it; release via
-    ``datapipe.release_caches()``), then the plan forks on bucket
-    size:
+    skew-safe, in one lazy plan with no join and no action.
 
-    * ≤ ``max_bucket``: pairs expand IN-ARRAY — k(k-1)/2 structs in
-      the bucket's own row, one task, no join. The fast path for the
-      overwhelmingly common small bucket.
-    * >  ``max_bucket``: the bucket's ids re-explode and SELF-JOIN on
-      (bucket key, SALT): the right side salts each position by
-      ``_j mod ceil(k/max_bucket)`` and the left side replicates into
-      every salt, so one hot bucket's k² pairs land in ~k/max_bucket
-      shuffle partitions of ≤ k·max_bucket pairs each — a DETERMINISTIC
-      split, not a hope that AQE notices (it would not: skew-join
-      splits on shuffle INPUT bytes, and a hot bucket's input is k
-      skinny rows while its OUTPUT is k² — invisible to the
-      heuristic). Replication cost is k²/max_bucket extra skinny rows,
-      vanishing next to the pairs themselves. A viral boilerplate
-      cluster now costs what it costs, spread across tasks, rather
-      than losing genuine near-dup pairs (r3 ADVICE: recall hole) or
-      serializing k² in one task.
+    One aggregation builds the sorted id list per bucket; the list is
+    cut into chunks of ``max_bucket`` ids and every chunk pair
+    (i <= j) becomes one CELL row holding the two slices. The cells
+    are spread by an exchange on (bucket key, i, j), then each cell
+    expands IN-ARRAY: the p < q positions of its chunk when i = j,
+    the full cross product when i < j (ids are sorted, so every pair
+    comes out as id_a < id_b). A small bucket is one cell, so the
+    common case is the plain in-array expansion; a hot bucket of k
+    ids becomes ~(k/max_bucket)²/2 cells of at most max_bucket² pairs
+    each — a DETERMINISTIC split of its k² output, not a hope that AQE
+    notices (it would not: skew splitting reads shuffle INPUT bytes,
+    and a hot bucket's input is k skinny ids while its OUTPUT is k²
+    pairs). A viral boilerplate cluster costs what it costs, spread
+    across tasks, rather than losing genuine near-dup pairs or
+    serializing k² in one task.
 
-    The cap therefore selects the PLAN SHAPE, never the recall."""
-    grouped = track(
+    ``max_bucket`` is therefore the split size, never a recall cap,
+    and every bucket size gets the same plan shape."""
+    m = max_bucket
+    grouped = (
         bucketed.groupBy(*keys)
         .agg(F.array_sort(F.collect_list("_id")).alias("ids"))
         .where(F.size("ids") >= 2)
-        .persist()
     )
-    # eager materialization: the small and big branches are separate
-    # stages the scheduler may launch CONCURRENTLY — before the cache
-    # is populated, each would recompute the full bucket aggregation.
-    # The pinning action doubles as the plan-shape probe: the global
-    # max bucket size costs the same full scan a bare count() did, and
-    # when NO bucket exceeds the cap (the overwhelmingly common case —
-    # every bucket at sf0.01/0.1) the big branch, its self-join, and
-    # the union are never built at all, so the common case pays zero
-    # empty-stage overhead (r4 regression: +23-34% on the minhash/
-    # simhash queries from scheduling the always-empty big branch).
-    max_size = (
-        grouped.agg(F.max(F.size("ids")).alias("mx")).first()["mx"] or 0
+    ids = F.col("ids")
+    nchunks = F.ceil(F.size(ids) / F.lit(m)).cast("int")
+
+    def chunk(i: Column) -> Column:
+        return F.slice(ids, i * m + 1, m)
+
+    # chunk i's slice and its row of later chunks j are projected
+    # BEFORE the cell explode, so the full id list is not copied into
+    # every cell row (at most max_bucket ids per slice ride a cell)
+    ci = F.col("_ci")
+    cells = (
+        grouped.select(*keys, "ids", F.explode(F.sequence(F.lit(0), nchunks - 1)).alias("_ci"))
+        .select(
+            *keys, "_ci", chunk(ci).alias("_a"),
+            F.transform(
+                F.sequence(ci, nchunks - 1),
+                # a diagonal cell's second slice IS its first: not shipped
+                lambda j: F.struct(j.alias("_cj"), F.when(j > ci, chunk(j)).alias("_b")),
+            ).alias("_row"),
+        )
+        # outer: a row is never empty, and a plain inline lets the
+        # optimizer infer a size(_row) > 0 filter that builds it twice
+        .select(*keys, "_ci", "_a", F.inline_outer("_row"))
     )
-    small = (
-        grouped
-        if max_size <= max_bucket
-        else grouped.where(F.size("ids") <= max_bucket)
-    )
-    n = F.size("ids")
-    pair_structs = F.flatten(
+    # the partition count is EXPLICIT: the exchange carries skinny
+    # id slices while the pairs are generated downstream of it, so
+    # AQE's size-based coalescing would merge it back into a few
+    # partitions and resurrect the straggler (DIVERGENCES #21)
+    nparts = bucketed.sparkSession.sparkContext.defaultParallelism
+    cells = cells.repartition(nparts, *keys, "_ci", "_cj")
+
+    # a diagonal cell pairs each id with the LATER ids of its own
+    # chunk (a one-id chunk yields none), an off-diagonal cell pairs
+    # every id of chunk i with every id of chunk j
+    a, b = F.col("_a"), F.col("_b")
+    expanded = F.flatten(
         F.transform(
-            F.sequence(F.lit(1), n - 1),
-            lambda i: F.transform(
-                F.sequence(i + 1, n),
-                lambda j: F.struct(
-                    F.element_at(F.col("ids"), i).alias("id_a"),
-                    F.element_at(F.col("ids"), j).alias("id_b"),
-                ),
+            a,
+            lambda x, p: F.transform(
+                F.filter(F.coalesce(b, a), lambda _y, q: b.isNotNull() | (q > p)),
+                lambda y: F.struct(x.alias("id_a"), y.alias("id_b")),
             ),
         )
     )
-    small_pairs = small.select(F.explode(pair_structs).alias("p")).select(
-        F.col("p.id_a"), F.col("p.id_b")
+    # distinct: the same pair can co-bucket under several keys
+    # (bands / pigeonhole chunks)
+    return (
+        cells.select(F.explode(expanded).alias("p"))
+        .select(F.col("p.id_a"), F.col("p.id_b"))
+        .distinct()
     )
-    if max_size <= max_bucket:
-        # distinct stays: the same pair can co-bucket under several
-        # keys (bands / pigeonhole chunks), whatever the plan shape
-        return small_pairs.distinct()
-    big = grouped.where(F.size("ids") > max_bucket)
-    nsplit = F.ceil(F.size("ids") / F.lit(max_bucket)).cast("int")
-    # pair (i, j) joins exactly once: the j side carries salt j mod ns,
-    # the i side is replicated into every salt of its bucket. The
-    # member explode and the ×ns salt replication are SEPARATE stages
-    # with a repartition between them: a bucket's ids live in ONE
-    # array row, so without the spread the task holding a k-member
-    # bucket would single-handedly generate all k·⌈k/max_bucket⌉
-    # replicated rows (measured at the megabucket stress: the 100k
-    # bucket's 39M-row explosion serialized on one core for minutes
-    # while 63 tasks sat idle). The partition count is EXPLICIT
-    # because AQE must not re-collapse it: the exchange carries only
-    # the k skinny member rows (~2 MB at k=100k), so size-based
-    # partition coalescing — blind to the ×ns downstream blow-up for
-    # the same input-vs-output reason as the skew-join heuristic —
-    # merged the unnumbered form back into one partition and
-    # resurrected the straggler (measured on the first fix attempt)
-    nparts = bucketed.sparkSession.sparkContext.defaultParallelism
-    e_a = (
-        big.select(
-            *keys, nsplit.alias("_ns"), F.posexplode("ids").alias("_i", "id_a")
-        )
-        .repartition(nparts, F.col("_i"))
-        .select(
-            *keys,
-            "_i",
-            "id_a",
-            F.explode(F.sequence(F.lit(0), F.col("_ns") - 1)).alias("_s"),
-        )
-    )
-    e_b = big.select(
-        *keys, nsplit.alias("_ns"), F.posexplode("ids").alias("_j", "id_b")
-    ).select(*keys, "_j", "id_b", (F.col("_j") % F.col("_ns")).alias("_s"))
-    big_pairs = (
-        e_a.join(e_b, [*keys, "_s"])
-        .where(F.col("_i") < F.col("_j"))
-        .select("id_a", "id_b")
-    )
-    return small_pairs.unionByName(big_pairs).distinct()
 
 
 def _cross_bucket_pairs(
     nb: DataFrame, rb: DataFrame, keys: list[str], max_bucket: int = 1024
 ) -> DataFrame:
     """(new_id, ref_id) pairs co-bucketed on ``keys``, STRICTLY
-    cross-side, exhaustive and skew-safe — the two-corpus sibling of
-    ``_bucket_pairs``, sharing its core analysis: a hot bucket's
-    shuffle INPUT is skinny rows while its OUTPUT is |new|·|ref|
-    pairs, invisible to AQE's input-byte skew heuristic, so any split
-    must be deterministic.
+    cross-side, exhaustive and skew-safe. A hot bucket's shuffle INPUT
+    is skinny rows while its OUTPUT is |new|·|ref| pairs, invisible
+    to AQE's input-byte skew heuristic, so any split must be
+    deterministic (the same analysis as ``_bucket_pairs``). Unlike
+    ``_bucket_pairs``' lazy chunk grid, this path keeps a probed
+    fork: on the cross path a chunk grid measured slower than the
+    plain equi-join it would replace (ROADMAP D4).
 
     Plan fork, decided by two SKINNY count aggregations (map-side
     partials — the common no-hot-bucket case pays only those, never
@@ -430,9 +404,10 @@ def lsh_candidate_pairs(
 ) -> DataFrame:
     """Banded-LSH candidate generation: (id_a < id_b) pairs sharing at
     least one band bucket. Shuffle equi-join on (band, band_hash) —
-    never a cross join. ``max_bucket`` picks the pair-expansion plan
-    per bucket size (see ``_bucket_pairs``); no bucket is dropped, so
-    banding recall is exactly the S-curve, with no silent cap."""
+    never a cross join. ``max_bucket`` is the chunk size that splits a
+    hot bucket's pair expansion across tasks (see ``_bucket_pairs``);
+    no bucket is dropped, so banding recall is exactly the S-curve,
+    with no silent cap."""
     if sigs is None:
         sigs = minhash_signatures_df(
             df, id_col=id_col, text_col=text_col,
@@ -467,17 +442,14 @@ def ngram_jaccard(
     against the cached projection shuffle the arrays once per side at
     |relevant docs| rows, not |pair sides| rows.) Cost stays
     O(candidates), never O(n²)."""
-    # the pair list feeds BOTH the relevance prune and the verify
-    # joins; without a pinned cache each consumer recomputes the
-    # upstream candidate/estimate stages (skinny rows — cheap to hold)
     from ._util import fan_out
 
-    # persisted but NOT eagerly pinned: the first action that touches
-    # it (sh's pin below) references sides exactly ONCE — through the
-    # semi-join's build side — so it materializes race-free as a side
-    # effect of that action; the verify joins then read the filled
-    # cache. An eager count() here was a whole extra driver-blocking
-    # job per query (~0.5 s of scheduling at sf0.1) buying nothing.
+    # the pair list feeds BOTH the relevance prune and the verify
+    # joins, and the gram-set projection both verify sides: each is
+    # persisted (skinny rows and one gram set per relevant doc, cheap
+    # to hold) so its consumers do not recompute the upstream stages.
+    # Neither is pinned: composing runs no job, and the caller's
+    # action fills both caches
     sides = track(pairs.select("id_a", "id_b").persist())
     relevant = fan_out(df).join(
         sides.select(F.explode(F.array("id_a", "id_b")).alias("_id")).distinct(),
@@ -492,7 +464,6 @@ def ngram_jaccard(
     sh = track(
         relevant.select(F.col(id_col).alias("_id"), gexpr.alias("_sh")).persist()
     )
-    sh.count()  # pin before both join sides race the cache
     joined = sides.join(
         sh.select(F.col("_id").alias("id_a"), F.col("_sh").alias("sh_a")), "id_a"
     ).join(sh.select(F.col("_id").alias("id_b"), F.col("_sh").alias("sh_b")), "id_b")
@@ -546,9 +517,9 @@ def jaccard_near_dup_pairs(
     longs, never the ~40-byte gram strings; measured 15s → ~4s at
     sf0.1 from the shuffle payload alone, and at 100 TB shuffling raw
     5-word strings three times would dominate the job) → df-cap
-    semi-join → ``_bucket_pairs`` (in-array expansion for small gram
-    buckets, deterministically salted self-join above the cap — the
-    same skew-safe machine as the LSH band buckets) → two joins of the
+    semi-join → ``_bucket_pairs`` (in-array expansion, hot gram
+    buckets split into ``max_bucket``-id chunk cells — the same
+    skew-safe machine as the LSH band buckets) → two joins of the
     skinny pair list against the cached gram-set projection. Never
     all-pairs; every stage is a bucketed equi-join or a map-side
     projection. A 64-bit collision can only (a) nudge a df count or
@@ -615,11 +586,11 @@ def near_dup_pairs(
     (fraction of agreeing signature slots — unbiased Jaccard
     estimator, sd ~ 1/sqrt(num_hashes)) at threshold minus a 3-sigma
     margin → exact shingle Jaccard for the survivors (two joins
-    against a cached shingle projection — see ngram_jaccard). NOTE:
-    composing this function RUNS Spark jobs (the cache pins below are
-    eager by design) — build it when you intend to execute. Output
-    is IDENTICAL with ``estimate_filter`` off (the margin keeps every
-    true pair; the verify is the final word); the flag exists because
+    against a cached shingle projection — see ngram_jaccard).
+    Composing runs no Spark job: the caches below are filled by the
+    caller's first action. Output is IDENTICAL with
+    ``estimate_filter`` off (the margin keeps every true pair; the
+    verify is the final word); the flag exists because
     the estimate moves 2 × num_hashes longs per candidate, which is
     A/B-measurable: at 10× scale the S-curve admits ~1M
     mid-similarity candidates, the estimate prunes them ~4× for
@@ -650,12 +621,7 @@ def near_dup_pairs(
     sigs = None
     if estimate_filter:
         # persisted: the banding pass and both estimate join sides
-        # read it. NOT eagerly pinned: the first action that touches
-        # it (_bucket_pairs' grouped pin) reaches sigs exactly ONCE
-        # (through the banding explode), so the cache fills race-free
-        # inside that action and the estimate joins read the filled
-        # cache — the old count() was one whole extra sequential job
-        # per query for a cache the very next action fills anyway.
+        # read it. Not pinned: the caller's action fills the cache
         sigs = track(
             minhash_signatures_df(
                 df, id_col=id_col, text_col=text_col,
@@ -731,10 +697,10 @@ def cross_near_dup_pairs(
     The three-stage discipline of ``near_dup_pairs`` applies: banded
     candidates — strictly new×ref via ``_cross_bucket_pairs``, whose
     grid salting bounds every task at max_bucket² pairs even for a
-    viral template bucket (output-side skew is invisible to AQE; same
-    analysis as ``_bucket_pairs``) — then the shared minhash-ESTIMATE
-    filter at threshold minus 3σ (measured 2.4M → ~140k candidates on
-    the 10× stress corpus), then exact shingle Jaccard with each side
+    viral template bucket (output-side skew is invisible to AQE) —
+    then the shared minhash-ESTIMATE filter at threshold minus 3σ
+    (measured 2.4M → ~140k candidates on the 10× stress corpus),
+    then exact shingle Jaccard with each side
     semi-join-pruned to the docs that actually appear in a candidate
     (the headline case is a small batch vs a huge corpus — shingling
     the whole reference every batch would dwarf the query itself).
@@ -796,7 +762,9 @@ def cross_near_dup_pairs(
             cand, sn, sr, "new_id", "ref_id", threshold, num_hashes
         ).persist()
     )
-    cand.count()  # pin before the semi-join prune and verify join race it
+    # pin before the semi-join prune and verify join race it: without
+    # it this call measured MORE jobs, not fewer (ROADMAP D4)
+    cand.count()
 
     def sh_proj(df: DataFrame, out_id: str) -> DataFrame:
         relevant = fan_out(df).join(
@@ -934,10 +902,10 @@ def simhash_near_dup_pairs(
     shares none). An explicit ``blocks`` <= max_hamming is rejected.
 
     Pigeonhole exhaustiveness is UNCONDITIONAL: ``max_bucket`` only
-    picks the pair-expansion plan per bucket size (``_bucket_pairs``
-    — in-array for small buckets, skew-splittable self-join for hot
-    ones). A degenerate chunk value (boilerplate / near-empty docs
-    all voting the same way) costs its true k² — spread across
+    sets the chunk size that splits a hot bucket's in-array pair
+    expansion across tasks (``_bucket_pairs``). A degenerate chunk
+    value (boilerplate / near-empty docs all voting the same way)
+    costs its true k² — spread across
     tasks — instead of silently losing hamming-1..3 pairs inside a
     >64-doc template cluster (r3 ADVICE)."""
     if blocks is None:
@@ -950,15 +918,12 @@ def simhash_near_dup_pairs(
 
     width = 64 // blocks
     # one long per doc; read by the chunking pass AND both hash
-    # join-backs — persisted like near_dup_pairs' signatures, released
+    # join-backs — persisted like near_dup_pairs' signatures (filled
+    # by the caller's action, never pinned), released
     # deterministically via datapipe.release_caches()
     h = track(
         simhash_df(df, id_col=id_col, text_col=text_col, hash_fn=hash_fn).persist()
     )
-    # no eager pin: the first action (_bucket_pairs' grouped pin)
-    # reads h exactly ONCE via the chunking explode, filling the
-    # cache race-free; both hash join-backs then read the filled
-    # cache — the old count() was an extra sequential job per call
 
     def chunk_of(b):
         shifted = F.call_function("shiftright", F.col("_h"), b * width)
@@ -972,7 +937,7 @@ def simhash_near_dup_pairs(
             F.transform(F.sequence(F.lit(0), F.lit(blocks - 1)), chunk_of)
         ).alias("block", "chunk"),
     )
-    # Size-routed pair expansion (exhaustive — see _bucket_pairs):
+    # Chunk-grid pair expansion (exhaustive — see _bucket_pairs):
     # skinny (id, id) rows only; the hash values join back in AFTER
     # the distinct has collapsed multi-block collisions, so wide
     # payloads never ride the hot join.
@@ -1015,27 +980,24 @@ def dedup_clusters(
     an absent id as keeper would silently drop the entire duplicate
     group (every present member non-keeper) — the exact data loss
     the operator exists to prevent. Every cluster with at least one
-    present member keeps exactly one.
+    present member keeps exactly one. A doc with a NULL id is
+    returned too, with NULL ``cluster_id`` and ``is_keeper``.
     """
     if pairs is None:
         pairs = near_dup_pairs(df, threshold=threshold, id_col=id_col, text_col=text_col)
     comp = connected_components(pairs)
-    # pinned: both the representative aggregate and the final join
-    # read this corpus-wide join — without the persist the second
-    # consumer re-executes it per action (rep is broadcast-small, so
-    # no reusable exchange exists on the labeled side)
-    labeled = track(
+    # one window over the component label elects the representative:
+    # no persisted join read twice, no aggregate joined back. A NULL
+    # id matches no component and has no id to elect, so it comes
+    # back with NULL cluster_id and is_keeper rather than being lost
+    labeled = (
         df.select(id_col)
         .join(comp.withColumnRenamed("node", id_col), id_col, "left")
         .select(id_col, F.coalesce("component", F.col(id_col)).alias("_comp"))
-        .persist()
     )
-    rep = labeled.groupBy("_comp").agg(F.min(id_col).alias("cluster_id"))
-    return (
-        labeled.join(rep, "_comp")
-        .select(id_col, "cluster_id")
-        .withColumn("is_keeper", F.col(id_col) == F.col("cluster_id"))
-    )
+    return labeled.select(
+        id_col, F.min(id_col).over(Window.partitionBy("_comp")).alias("cluster_id")
+    ).withColumn("is_keeper", F.col(id_col) == F.col("cluster_id"))
 
 
 def contamination(

@@ -316,10 +316,11 @@ def image_near_dup(
     id_b, hamming) with id_a < id_b.
 
     Scale: candidates come from (band, chunk) buckets — never a
-    cross join — expanded by the size-routed ``_bucket_pairs``
-    machine (in-array for small buckets, salted self-join for viral
-    ones, exhaustive either way); signature payloads join back only
-    AFTER the distinct has collapsed multi-band collisions."""
+    cross join — expanded in-array by the ``_bucket_pairs`` chunk
+    grid (a viral bucket splits into ``max_bucket``-id chunk cells,
+    exhaustive either way); signature payloads join back only AFTER
+    the distinct has collapsed multi-band collisions. Composing runs
+    no Spark job: the caller's action fills the signature cache."""
     if not 0 <= max_hamming < _AHASH_BANDS:
         raise ValueError(
             f"need 0 <= max_hamming < {_AHASH_BANDS} (pigeonhole over "
@@ -333,9 +334,6 @@ def image_near_dup(
         .withColumnRenamed(id_col, "_id")
         .persist()
     )
-    # no eager pin: the first action (_bucket_pairs' grouped pin)
-    # reads h exactly ONCE via the chunking explode, filling the
-    # cache race-free; the signature join-backs read the filled cache
     chunked = h.select(
         "_id",
         F.posexplode(

@@ -5223,7 +5223,7 @@ FROM agg
 # cross-multiplied block_sum·L > total·block_len (exact BIGINT, no
 # float means) — split into four 16-bit bands; Hamming ≤ 3 pairs
 # must share a band (pigeonhole), candidates come from band buckets
-# via the size-routed _bucket_pairs machine, then the exact
+# via the chunk-grid _bucket_pairs machine, then the exact
 # bit_count(xor) verify. The corpus = documents' payload bytes plus
 # an e→a-perturbed variant of every fifth doc — a controlled
 # byte-profile drift that lands most (but not all) variant pairs
@@ -6235,7 +6235,7 @@ QUERIES: dict[str, Declared] = {
     ),
     # image near-dup for the multimodal family (r15 verdict ask #5):
     # integer-exact block-mean aHash over the binary payload, four
-    # 16-bit bands, pigeonhole candidates via the size-routed
+    # 16-bit bands, pigeonhole candidates via the chunk-grid
     # _bucket_pairs machine, exact bit_count(xor) verify
     "dp_image_near_dup": Declared(
         _dp_image_near_dup, _DP_IMAGE_NEAR_DUP_SQL

@@ -259,7 +259,7 @@ def test_simhash_near_dups(spark, documents):
 def test_simhash_hot_bucket_exhaustive(spark):
     # A template cluster far above max_bucket, plus small-edit
     # variants: the r3 cap silently DROPPED every pair in oversized
-    # buckets (ADVICE: recall hole); the size-routed plan must keep
+    # buckets (ADVICE: recall hole); the chunk-grid plan must keep
     # pigeonhole recall at exactly 1 — verified against a brute-force
     # hamming computation over the same signatures.
     from pipz_spark.datapipe.dedup import simhash_df
@@ -818,18 +818,75 @@ def test_fan_out_rebalances_only_when_under_partitioned(spark, tmp_path):
     assert out is wide  # no-op, not a new plan
 
 
-def test_bucket_pairs_small_only_skips_big_branch(spark):
-    # when no bucket exceeds the cap the big-branch self-join must
-    # not appear in the plan (r4: the always-empty branch cost +23-34%
-    # on the minhash/simhash suite queries)
+def test_bucket_pairs_one_joinless_plan_is_exhaustive(spark):
+    # every bucket size expands through one chunk-grid plan with no
+    # join: small buckets, buckets at the chunk boundaries and a hot
+    # bucket all yield exactly the brute-force pair set
+    from itertools import combinations
+
     from pipz_spark.datapipe.dedup import _bucket_pairs
 
-    rows = [(b, 0, 10 * b + i) for b in range(3) for i in range(4)]
-    bucketed = spark.createDataFrame(rows, "band long, band_hash long, _id long")
-    pairs = _bucket_pairs(bucketed, ["band", "band_hash"], max_bucket=16)
-    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
-    assert "Join" not in plan
-    assert pairs.count() == 3 * 6  # 3 buckets x C(4,2), exhaustive
+    def check(buckets, max_bucket):
+        rows = [(b, 0, i) for b, ids in enumerate(buckets) for i in ids]
+        bucketed = spark.createDataFrame(rows, "band long, band_hash long, _id long")
+        pairs = _bucket_pairs(bucketed, ["band", "band_hash"], max_bucket)
+        plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+        assert "Join" not in plan
+        got = [(r["id_a"], r["id_b"]) for r in pairs.collect()]
+        want = {p for ids in buckets for p in combinations(sorted(ids), 2)}
+        assert len(got) == len(want) and set(got) == want
+        return pairs
+
+    check([[10 * b + i for i in range(4)] for b in range(3)], max_bucket=16)
+    # sizes m-1, m, m+1, 2m, 2m+1 (and 1) at m = 4; ids arrive
+    # unsorted and overlap between buckets, so pairs repeat across keys
+    m = 4
+    sizes = [1, m - 1, m, m + 1, 2 * m, 2 * m + 1]
+    check([[(7 * i + 3 * b) % 50 for i in range(k)] for b, k in enumerate(sizes)], m)
+    # a hot bucket (15 chunks, 120 cells): its cell exchange keeps the
+    # explicit partition count, never coalesced by AQE
+    hot = check([list(range(60))] + [[100 + b, 101 + b] for b in range(5)], m)
+    nparts = spark.sparkContext.defaultParallelism
+    final = hot._jdf.queryExecution().executedPlan().toString().split("== Initial Plan ==")[0]
+    lines = final.splitlines()
+    at = [i for i, line in enumerate(lines) if "REPARTITION_BY_NUM" in line]
+    assert len(at) == 1
+    assert f", {nparts}), REPARTITION_BY_NUM" in lines[at[0]]
+    assert "AQEShuffleRead" not in lines[at[0] - 2]
+
+
+def test_near_dup_operators_compose_without_running_a_job(spark, documents):
+    # building a near-dup frame runs no Spark job: no cache pin and no
+    # plan-shape probe; the caller's first action does all the work
+    import uuid
+
+    from pipz_spark.datapipe import jaccard_near_dup_pairs, release_caches
+    from pipz_spark.datapipe.multimodal import image_near_dup
+
+    blob = F.encode(F.coalesce("text", F.lit("")), "utf-8").alias("blob")
+    images = documents.select("doc_id", blob)
+    builds = {
+        "near_dup_pairs": lambda: near_dup_pairs(documents),
+        "near_dup_pairs/no-estimate": lambda: near_dup_pairs(documents, estimate_filter=False),
+        "lsh_candidate_pairs": lambda: lsh_candidate_pairs(documents),
+        "jaccard_near_dup_pairs": lambda: jaccard_near_dup_pairs(documents),
+        "simhash_near_dup_pairs": lambda: simhash_near_dup_pairs(documents),
+        "image_near_dup": lambda: image_near_dup(images),
+    }
+    sc = spark.sparkContext
+    jobs = {}
+    try:
+        for name, build in builds.items():
+            group = f"compose-{uuid.uuid4().hex}"
+            sc.setJobGroup(group, group)
+            try:
+                build()
+            finally:
+                sc._jsc.clearJobGroup()
+            jobs[name] = len(sc.statusTracker().getJobIdsForGroup(group))
+    finally:
+        release_caches()
+    assert jobs == dict.fromkeys(builds, 0)
 
 
 def test_deterministic_shuffle_stable_and_contiguous(spark, documents):
@@ -1117,6 +1174,23 @@ def test_dedup_clusters_keeper_present_when_min_id_filtered_out(spark):
     rows = {r["doc_id"]: (r["cluster_id"], r["is_keeper"])
             for r in dedup_clusters(docs, pairs=pairs).collect()}
     assert rows == {3: (3, True), 5: (3, False)}
+
+
+def test_dedup_clusters_returns_null_id_docs(spark):
+    # "for EVERY input doc": a NULL-id doc matches no component and has
+    # no id to elect, so it comes back with NULL cluster_id/is_keeper
+    from pipz_spark.datapipe import dedup_clusters
+
+    docs = spark.createDataFrame(
+        [(0, "t"), (3, "t"), (5, "t"), (None, "t"), (None, "u")], "doc_id long, text string"
+    )
+    pairs = spark.createDataFrame([(0, 3)], "id_a long, id_b long")
+    rows = sorted(
+        (tuple(r) for r in dedup_clusters(docs, pairs=pairs).collect()),
+        key=lambda t: (t[0] is None, t[0] or 0),
+    )
+    assert rows == [(0, 0, True), (3, 0, False), (5, 5, True),
+                    (None, None, None), (None, None, None)]
 
 
 def test_chunk_documents_window_semantics(spark):

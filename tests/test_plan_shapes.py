@@ -631,7 +631,7 @@ def test_heavy_hitters_build_rides_the_range_exchange(spark):
 
 def test_image_near_dup_is_banded_never_cartesian(spark):
     # candidates must come from (band, chunk) equi-buckets via the
-    # size-routed pair machine — a regression to all-pairs is THE
+    # chunk-grid pair machine — a regression to all-pairs is THE
     # canonical non-scalable plan; the only Python is the Arrow-
     # batched aHash projection (mapInPandas), never row-at-a-time
     plan = _plan(spark, "dp_image_near_dup")
@@ -849,6 +849,7 @@ def _round_trips(spark, monkeypatch, fn, reps: int = 3) -> int:
     Collection is off while counting, so an object freed by an earlier
     call (a py4j detach is a round trip too) lands in no later count."""
     import gc
+    import time
 
     client = spark.sparkContext._gateway._gateway_client
     send = client.send_command
@@ -862,6 +863,12 @@ def _round_trips(spark, monkeypatch, fn, reps: int = 3) -> int:
     seen = []
     for _ in range(reps):
         gc.collect()
+        # py4j sends the detaches of freed objects from a background
+        # worker thread through this same client; let it drain what
+        # the collection freed before the count starts
+        deadline = time.monotonic() + 30
+        while getattr(client, "finalizer_deque", None) and time.monotonic() < deadline:
+            time.sleep(0.01)
         gc.disable()
         try:
             calls[0] = 0

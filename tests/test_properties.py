@@ -1108,8 +1108,8 @@ def test_image_near_dup_matches_brute_force(spark_prop, blobs, max_hamming):
     """image_ahash equals the byte-level replay for ANY payloads, and
     image_near_dup is EXHAUSTIVE: its banded candidates + xor verify
     return exactly the brute-force Hamming <= d pair set — with
-    max_bucket=2 so degenerate all-equal corpora exercise the salted
-    hot-bucket path, not just the in-array one."""
+    max_bucket=2 so degenerate all-equal corpora split a hot bucket
+    into many chunk cells, not just one in-array cell."""
     from pipz_spark.datapipe import release_caches
     from pipz_spark.datapipe.multimodal import image_ahash, image_near_dup
 

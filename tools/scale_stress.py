@@ -943,8 +943,8 @@ def main() -> None:
 
 
 def main_megabucket(only: str | None = None) -> None:
-    """Mega-bucket routing stress (VERDICT r9 #7): prove the
-    size-routed bucket path holds when a SINGLE bucket dominates —
+    """Mega-bucket stress (VERDICT r9 #7): prove the chunk-grid
+    bucket path holds when a SINGLE bucket dominates —
     one template family orders of magnitude above ``max_bucket``,
     the skew shape task 1's heavy-hitter line models for line_dedup.
 
@@ -962,8 +962,9 @@ def main_megabucket(only: str | None = None) -> None:
       machine minhash LSH banding and simhash pigeonhole SHARE) fed
       one 100,000-id bucket plus 10,000 ten-id buckets. Designed
       output is exactly C(100k,2) + 10k*C(10,2) = 5,000,400,000
-      pairs; per-task pair output is bounded at ~k*max_bucket by the
-      deterministic salt split, so the evidence is the row count
+      pairs; the hot bucket splits into ~(k/max_bucket)^2/2 chunk
+      cells of at most max_bucket^2 pairs each, spread by an
+      explicitly numbered exchange, so the evidence is the row count
       landing exactly and max_task_ms staying near the task median
       (NOT ~k^2/32 — one unsplit task would be minutes on its own).
     * ``simhash mega10k`` — the operator end-to-end: 10,000
