@@ -5,12 +5,13 @@ each ``queries()[name]`` at sf=0.01 and compares it against the
 matching ``oracle_sql()[name]`` via DuckDB (row-count + schema +
 order-insensitive value-hash → CORRECTNESS_r{N}.json).
 
-The catalog itself lives in ``pipz_spark.queries`` (one Declared
+The catalog itself lives in ``oracle_suite.queries`` (one Declared
 entry per implemented operator from SURVEY.md §2 plus the datapipe
-operators); this file just adapts it to the driver's shape. The
+operators), the conformance suite kept outside the ``pipz_spark``
+library; this file just adapts it to the driver's shape. The
 driver truncates its gate at the first 50 entries, so the registry's
 insertion order is curated and ROTATES per round — see the comment
-block above ``QUERIES`` in pipz_spark/queries.py; everything past
+block above ``QUERIES`` in oracle_suite/queries.py; everything past
 the window is gated locally by tests/test_tail_oracle.py and
 tools/check_correctness.py.
 """
@@ -21,7 +22,7 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-from pipz_spark.queries import QUERIES, flagship
+from oracle_suite.queries import QUERIES, flagship
 
 
 def entry(spark: SparkSession) -> DataFrame:

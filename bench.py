@@ -73,7 +73,7 @@ import pandas as pd
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from pipz_spark.datapipe import release_caches  # noqa: E402
-from pipz_spark.queries import QUERIES  # noqa: E402
+from oracle_suite.queries import QUERIES  # noqa: E402
 from pipz_spark.session import get_session  # noqa: E402
 
 
@@ -179,7 +179,7 @@ def main() -> None:
     # memoize (harness fixture setup — building the replay's part
     # files is test-input construction, not operator cost; without
     # this it bills ~2.5s to whichever stream_* query runs first)
-    from pipz_spark.streaming.streams import replay_events_files
+    from oracle_suite.streams import replay_events_files
 
     replay_events_files(spark, sf_dir, order_by_ts=True)
     # spawn the Python/pandas-UDF worker pool up front: the first
@@ -295,7 +295,7 @@ def main() -> None:
     import concurrent.futures
 
     # heaviest-first submission (longest-processing-time scheduling):
-    # query starts serialize on run_step_stream's _START_LOCK, so a
+    # query starts serialize on drain_stream's start lock, so a
     # pacing rig submitted late carries every earlier start in its
     # span AND in the block wall. History (the last committed run)
     # orders the rigs; unknown rigs go first (assume heavy), and with

@@ -12,7 +12,7 @@ length, where complete-mode rewrite grows with the stream's lifetime.
 
 On a real cluster the same code runs against a Kafka/file source with
 tight watermarks; the replay rig here exists so the output can be
-checked against a batch oracle (see queries.py: stream_events_*).
+checked against a batch oracle (see oracle_suite/streams.py).
 """
 
 from __future__ import annotations
@@ -25,12 +25,9 @@ from pyspark.sql import functions as F
 from pipz_spark import get_session
 from pipz_spark.operators.processors import transform
 from pipz_spark.sources.sinks import append_log_sink, compact_log, read_latest, read_merged
-from pipz_spark.streaming import (
-    replay_events_files,
-    run_step_stream,
-    windowed_agg,
-)
-from pipz_spark.streaming.streams import _NORMALIZED_EVENTS
+from pipz_spark.streaming import run_step_stream, windowed_agg
+
+from oracle_suite.streams import _NORMALIZED_EVENTS, replay_events_files
 
 
 def main() -> None:
@@ -76,7 +73,6 @@ def main() -> None:
         checkpoint=tempfile.mkdtemp(prefix="hourly_ckpt_"),
         query_name="example-hourly",
         output_mode="update",
-        state_partitions=8,
     )
     q.processAllAvailable()
     q.stop()

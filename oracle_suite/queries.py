@@ -25,9 +25,9 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from . import operators as P
-from .core.errors import error_path_str, split_failed, split_ok, ERROR_COL
-from .datapipe import (
+from pipz_spark import operators as P
+from pipz_spark.core.errors import error_path_str, split_failed, split_ok, ERROR_COL
+from pipz_spark.datapipe import (
     attach_blob,
     cosine_topk_bruteforce,
     cosine_topk_lsh,
@@ -40,8 +40,8 @@ from .datapipe import (
     text_stats,
     token_count,
 )
-from .datapipe.text import STOPWORDS
-from .sources.catalog import load_table
+from pipz_spark.datapipe.text import STOPWORDS
+from pipz_spark.sources.catalog import load_table
 
 
 @dataclass(frozen=True)
@@ -695,7 +695,7 @@ SELECT c_custkey FROM customer WHERE c_acctbal > 5000
 # operators/relational.py:as_of_join); the oracle is DuckDB's NATIVE
 # ASOF LEFT JOIN, i.e. two independent formulations of the semantics.
 def _rel_asof(spark, sf):
-    from .operators.relational import as_of_join
+    from pipz_spark.operators.relational import as_of_join
 
     ev = _t(spark, sf, "events")
     purchases = ev.where(F.col("event_type") == "purchase").select(
@@ -744,7 +744,7 @@ ASOF LEFT JOIN (SELECT user_id, ts, max(value) AS value
 # oracle is DuckDB's native inequality join (IEJoin) — two
 # independent physical strategies for the same semantics.
 def _rel_range_join(spark, sf):
-    from .operators.relational import range_join
+    from pipz_spark.operators.relational import range_join
 
     ev = _t(spark, sf, "events")
     iv = (
@@ -1277,22 +1277,22 @@ GROUP BY 1, 2
 
 # The same window computed by an ACTUAL streaming execution: 4-file
 # replay → incremental state-store aggregation → foreachBatch landing
-# to parquet (streaming/streams.py:stream_events_hourly). Same oracle
+# to parquet (oracle_suite/streams.py:stream_events_hourly). Same oracle
 # as the batch shape — the hard check that Structured Streaming's
 # incremental path reaches the identical answer (closes SURVEY M4).
 def _stream_events_window(spark, sf):
-    from .streaming.streams import stream_events_hourly
+    from .streams import stream_events_hourly
 
     return stream_events_hourly(spark, sf)
 
 
 # Stream-static join, STREAMING-EXECUTED: the fact stream enriched
 # per micro-batch against a broadcast customer dimension, then
-# day-windowed per market segment (streaming/streams.py:
+# day-windowed per market segment (oracle_suite/streams.py:
 # stream_static_join). The join itself is stateless (only the window
 # agg holds state); oracle = the plain batch join + group-by.
 def _stream_static_join(spark, sf):
-    from .streaming.streams import stream_static_join
+    from .streams import stream_static_join
 
     return stream_static_join(spark, sf)
 
@@ -1313,9 +1313,9 @@ GROUP BY 1, 2
 # oracle can replay it — streams in 2 micro-batch files, and each
 # batch anti-joins (by md5 content hash) the static reference corpus.
 # The stream-static ANTI join is stateless; only genuinely new
-# content lands (streaming/streams.py: stream_ingest_dedup).
+# content lands (oracle_suite/streams.py: stream_ingest_dedup).
 def _stream_ingest_dedup(spark, sf):
-    from .streaming.streams import stream_ingest_dedup
+    from .streams import stream_ingest_dedup
 
     return stream_ingest_dedup(spark, sf)
 
@@ -1384,9 +1384,9 @@ FROM s GROUP BY user_id, sid
 
 # The same sessions computed by an ACTUAL streaming execution: state
 # store session merging, append mode, tight watermark, sentinel-closed
-# tail (streaming/streams.py:stream_events_sessions). Same oracle.
+# tail (oracle_suite/streams.py:stream_events_sessions). Same oracle.
 def _stream_events_sessions(spark, sf):
-    from .streaming.streams import stream_events_sessions
+    from .streams import stream_events_sessions
 
     return stream_events_sessions(spark, sf)
 
@@ -1394,7 +1394,7 @@ def _stream_events_sessions(spark, sf):
 # Streaming-executed stream-stream join: clicks x purchases per user
 # within ±10 min event time; landed appends must equal the batch join.
 def _stream_events_join(spark, sf):
-    from .streaming.streams import stream_events_join
+    from .streams import stream_events_join
 
     return stream_events_join(spark, sf)
 
@@ -1403,7 +1403,7 @@ def _stream_events_join(spark, sf):
 # running totals, scaled-integer accumulator): latest emission per
 # user = final state = the batch GROUP BY below.
 def _stream_running_totals(spark, sf):
-    from .streaming.streams import stream_running_totals
+    from .streams import stream_running_totals
 
     return stream_running_totals(spark, sf)
 
@@ -1430,9 +1430,9 @@ WHERE a.event_type = 'click' AND b.event_type = 'purchase'
 # time-ordered replay), dropDuplicatesWithinWatermark keeps the first
 # copy via the state store, append-mode landing. The landed table must
 # equal the original events table — the state store's dedup path held
-# to a hard batch oracle (streaming/streams.py:stream_events_dedup).
+# to a hard batch oracle (oracle_suite/streams.py:stream_events_dedup).
 def _stream_events_dedup(spark, sf):
-    from .streaming.streams import stream_events_dedup
+    from .streams import stream_events_dedup
 
     return stream_events_dedup(spark, sf)
 
@@ -1611,7 +1611,7 @@ FROM documents
 # correctness (operator interactions) is oracle-checked, not just the
 # pieces
 def _e2e_training_pipeline(spark, sf):
-    from .datapipe import deterministic_split
+    from pipz_spark.datapipe import deterministic_split
 
     pipe = P.sequence(
         "corpus-prep",
@@ -1656,7 +1656,7 @@ FROM bucketed
 
 # Regex tokenizer (portable \p classes; RE2-safe subset of GPT-2)
 def _dp_regex_tokens(spark, sf):
-    from .datapipe import regex_token_count
+    from pipz_spark.datapipe import regex_token_count
 
     return split_ok(regex_token_count()(_t(spark, sf, "documents"))).select(
         "doc_id", "n_word_tokens", "n_number_tokens", "n_symbol_tokens", "n_regex_tokens"
@@ -1681,13 +1681,15 @@ FROM documents
 # recursive-CTE replay of the same merge table (generated from the
 # checked-in fixture, never from the Python encoder's output).
 def _dp_bpe_tokens(spark, sf):
-    from .datapipe import bpe_tokens_df
+    from pipz_spark.datapipe import bpe_tokens_df
 
     return bpe_tokens_df(_t(spark, sf, "documents"))
 
 
 def _bpe_sql() -> str:
-    from .datapipe.bpe import load_merges, oracle_sql
+    from pipz_spark.datapipe.bpe import load_merges
+
+    from .bpe import oracle_sql
 
     return oracle_sql(load_merges())
 
@@ -1701,7 +1703,7 @@ _DP_BPE_SQL = _bpe_sql()
 # same windows from regexp_split + range + 1-based inclusive list
 # slicing.
 def _dp_chunk(spark, sf):
-    from .datapipe import chunk_documents
+    from pipz_spark.datapipe import chunk_documents
 
     return chunk_documents(_t(spark, sf, "documents"), size=32, stride=24)
 
@@ -1726,7 +1728,7 @@ WHERE s = 0 OR s + 8 < len(toks)
 # scrubbing — the redaction machinery has real matches to hit, and
 # the oracle must agree on every replacement boundary.
 def _dp_redact(spark, sf):
-    from .datapipe import redact_pii
+    from pipz_spark.datapipe import redact_pii
 
     d = _t(spark, sf, "documents")
     aug = d.select(
@@ -1762,7 +1764,7 @@ FROM documents
 # count would be quadratic; map-side partial agg collapses each
 # doc's repeats before the shuffle.
 def _dp_ngram_repetition(spark, sf):
-    from .datapipe import ngram_repetition
+    from pipz_spark.datapipe import ngram_repetition
 
     return ngram_repetition(_t(spark, sf, "documents"), n=2)
 
@@ -1792,7 +1794,7 @@ FROM c GROUP BY 1
 # chop — md5 sharding + one window cumsum per shard; pack_id/offset
 # re-derived independently by the oracle's window SQL.
 def _dp_pack(spark, sf):
-    from .datapipe import chunk_documents, pack_sequences
+    from pipz_spark.datapipe import chunk_documents, pack_sequences
 
     chunks = chunk_documents(_t(spark, sf, "documents"), size=32, stride=24)
     return pack_sequences(chunks, budget=256, shards=8).select(
@@ -1831,7 +1833,7 @@ FROM st
 # shuffles; the oracle rebuilds the identical grams from regexp_split
 # + range + list slicing.
 def _dp_decontaminate(spark, sf):
-    from .datapipe import contamination
+    from pipz_spark.datapipe import contamination
 
     d = _t(spark, sf, "documents")
     ev = d.where(F.col("doc_id") % 50 == 0)
@@ -1863,7 +1865,7 @@ GROUP BY 1
 # applies the identical rule), verify = exact Jaccard on the full
 # distinct 5-gram sets, thresholded on the rounded score both sides.
 def _dp_jaccard_ngram(spark, sf):
-    from .datapipe import jaccard_near_dup_pairs
+    from pipz_spark.datapipe import jaccard_near_dup_pairs
 
     return jaccard_near_dup_pairs(
         _t(spark, sf, "documents"), threshold=0.5, n=5, max_doc_freq=64
@@ -1904,7 +1906,7 @@ SELECT id_a, id_b, jaccard FROM scored WHERE jaccard >= 0.5
 # per doc as decimal(28,6) (associative), divided by the count once —
 # so DuckDB reproduces the mean bit-for-bit from the same definition.
 def _dp_lm_quality(spark, sf):
-    from .datapipe import lm_quality_scores
+    from pipz_spark.datapipe import lm_quality_scores
 
     return lm_quality_scores(_t(spark, sf, "documents"))
 
@@ -1959,7 +1961,7 @@ FROM documents d LEFT JOIN agg ON d.doc_id = agg.doc_id
 # because a per-language ntile window would sort each whole language
 # in one task — see perplexity_buckets' docstring.
 def _dp_ccnet_buckets(spark, sf):
-    from .datapipe import perplexity_buckets
+    from pipz_spark.datapipe import perplexity_buckets
 
     return perplexity_buckets(_t(spark, sf, "documents"), buckets=3)
 
@@ -1985,7 +1987,7 @@ FROM allrows a LEFT JOIN rnk ON a.doc_id = rnk.doc_id
 # profiling (datapipe.sampling) — md5-bucket membership replays
 # exactly in any engine with md5
 def _dp_split(spark, sf):
-    from .datapipe import deterministic_split
+    from pipz_spark.datapipe import deterministic_split
 
     step = deterministic_split(
         "tvt", "doc_id", {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -2007,7 +2009,7 @@ FROM b
 
 
 def _dp_sample(spark, sf):
-    from .datapipe import deterministic_sample
+    from pipz_spark.datapipe import deterministic_sample
 
     step = deterministic_sample("tenpct", "doc_id", 0.1)
     return split_ok(step(_t(spark, sf, "documents"))).select("doc_id")
@@ -2023,7 +2025,7 @@ WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || 'sample'), 1, 8)) A
 # language — the per-source/per-language quota step of corpus
 # assembly, content-hash-stable like the other sampling ops.
 def _dp_stratified(spark, sf):
-    from .datapipe import stratified_sample
+    from pipz_spark.datapipe import stratified_sample
 
     step = stratified_sample(
         "lang-mix", "doc_id", ["lang"], {"en": 0.1}, default_fraction=1.0
@@ -2039,7 +2041,7 @@ WHERE CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || 'strata'), 1, 8)) A
 
 
 def _dp_profile(spark, sf):
-    from .datapipe import dataset_profile
+    from pipz_spark.datapipe import dataset_profile
 
     step = dataset_profile("doc-profile", ["n_chars"], group_by=["lang"])
     return split_ok(step(_t(spark, sf, "documents")))
@@ -2098,7 +2100,7 @@ WHERE json_extract(props, '$.k') IS NOT NULL
 
 # UDF escape hatch — arbitrary Python with exception capture
 def _udf_apply(spark, sf):
-    from .functions import python_apply
+    from pipz_spark.functions import python_apply
 
     def bucketize(total: float) -> int:
         if total < 5000:
@@ -2119,7 +2121,7 @@ FROM orders WHERE o_totalprice >= 5000
 # arithmetic on byte length, so the row-explosion plumbing gets a
 # hash-matched oracle
 def _dp_frame_sample(spark, sf):
-    from .datapipe import sample_frames
+    from pipz_spark.datapipe import sample_frames
 
     blobs = split_ok(attach_blob()(_t(spark, sf, "documents")))
     frames = sample_frames(blobs, every_n_bytes=64)
@@ -2199,7 +2201,7 @@ WHERE least(na.n, nb.n) >= 0.7 * greatest(na.n, nb.n)
 # shuffles, localCheckpoint per round); oracle: DuckDB recursive-CTE
 # transitive closure over the same exact-Jaccard pair set.
 def _dp_dedup_clusters(spark, sf):
-    from .datapipe import dedup_clusters
+    from pipz_spark.datapipe import dedup_clusters
 
     return dedup_clusters(_t(spark, sf, "documents"), threshold=0.7)
 
@@ -2210,7 +2212,7 @@ def _dp_dedup_clusters(spark, sf):
 # re-derives the identical pair rule and closes it with the same
 # recursive CTE.
 def _dp_jaccard_clusters(spark, sf):
-    from .datapipe import dedup_clusters, jaccard_near_dup_pairs
+    from pipz_spark.datapipe import dedup_clusters, jaccard_near_dup_pairs
 
     d = _t(spark, sf, "documents")
     pairs = jaccard_near_dup_pairs(d, threshold=0.5, n=5, max_doc_freq=64)
@@ -2416,7 +2418,7 @@ def _dp_ann_lsh(spark, sf):
 
 
 def _dp_ann_ivf(spark, sf):
-    from .datapipe import cosine_topk_ivf
+    from pipz_spark.datapipe import cosine_topk_ivf
 
     emb = _t(spark, sf, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
@@ -2429,7 +2431,7 @@ def _dp_ann_ivf(spark, sf):
 
 
 def _dp_ann_pq(spark, sf):
-    from .datapipe import cosine_topk_pq
+    from pipz_spark.datapipe import cosine_topk_pq
 
     emb = _t(spark, sf, "embeddings")
     queries = emb.where(F.col("vec_id") < 10)
@@ -2452,7 +2454,7 @@ def _dp_ann_pq(spark, sf):
 # per side before the exact-decimal per-doc mean, so the score is
 # engine-exact (the lm_quality discipline).
 def _dp_dsir_weights(spark, sf):
-    from .datapipe import dsir_log_ratio
+    from pipz_spark.datapipe import dsir_log_ratio
 
     docs = _t(spark, sf, "documents")
     target = docs.where(F.col("doc_id") % 50 == 0)
@@ -2506,7 +2508,7 @@ FROM pool p LEFT JOIN agg ON p.doc_id = agg.doc_id
 # — so the DuckDB oracle replays BOTH training epochs and the final
 # scores bit-for-bit (the kmeans/dsir discipline).
 def _dp_quality_classifier(spark, sf):
-    from .datapipe import train_quality_classifier
+    from pipz_spark.datapipe import train_quality_classifier
 
     return train_quality_classifier(
         _t(spark, sf, "documents"), F.col("doc_id") % 50 == 0
@@ -2582,7 +2584,7 @@ FROM s3
 # α = 9 keeps ~1/512 of a low-score pool — pareto_keep's default);
 # the rule's machinery is identical at any α.
 def _dp_clf_keep(spark, sf):
-    from .datapipe import pareto_keep, train_quality_classifier
+    from pipz_spark.datapipe import pareto_keep, train_quality_classifier
 
     scored = train_quality_classifier(
         _t(spark, sf, "documents"), F.col("doc_id") % 50 == 0
@@ -2617,7 +2619,7 @@ WHERE (CAST(CAST(('0x' || substring(md5(CAST(doc_id AS VARCHAR) || 'clfkeep'), 1
 # was chosen over Efraimidis–Spirakis; see sampling.priority_sample).
 # Weight = n_chars: sample 100 documents ∝ length.
 def _dp_priority_sample(spark, sf):
-    from .datapipe import priority_sample
+    from pipz_spark.datapipe import priority_sample
 
     return priority_sample(
         _t(spark, sf, "documents"), 100, "n_chars", estimate=True
@@ -2648,7 +2650,7 @@ FROM (SELECT * FROM k ORDER BY priority DESC, doc_id LIMIT 100) CROSS JOIN tau
 # the dp_ccnet_buckets machine): the oracle's per-lang window
 # row_number is what the Spark side deliberately does NOT run.
 def _dp_exact_split(spark, sf):
-    from .datapipe import exact_stratified_split
+    from pipz_spark.datapipe import exact_stratified_split
 
     return exact_stratified_split(
         _t(spark, sf, "documents"), {"train": 0.8, "val": 0.1, "test": 0.1}
@@ -2679,7 +2681,7 @@ FROM r
 # computes the same numbers without ever exploding (zip_with +
 # aggregate expressions over literal centroids — pure codegen).
 def _dp_kmeans(spark, sf):
-    from .datapipe import kmeans_embeddings
+    from pipz_spark.datapipe import kmeans_embeddings
 
     return kmeans_embeddings(_t(spark, sf, "embeddings"), k=4, iters=2)
 
@@ -2734,7 +2736,7 @@ QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dq, cell) = 1
 # them over the per-dimension explode while the Spark side stays a
 # join-free zip_with fold over literal centers.
 def _dp_kcenter(spark, sf):
-    from .datapipe import kcenter_select
+    from pipz_spark.datapipe import kcenter_select
 
     return kcenter_select(_t(spark, sf, "embeddings"), k=4)
 
@@ -2784,7 +2786,7 @@ QUALIFY row_number() OVER (PARTITION BY vec_id ORDER BY dq, cid) = 1
 # oracle at sf0.01, union-find pair-graph gate cross-SF (the
 # CLUSTER_PAIR_ORACLES path, embeddings table).
 def _dp_semdedup(spark, sf):
-    from .datapipe import semantic_dedup
+    from pipz_spark.datapipe import semantic_dedup
 
     return semantic_dedup(
         _t(spark, sf, "embeddings"), threshold=0.4, bits=3, tables=32
@@ -2797,7 +2799,7 @@ _DP_SEMDEDUP_SQL = _cluster_oracle(
 
 
 def _dp_embed_near_dup(spark, sf):
-    from .datapipe import embedding_near_dup_pairs
+    from pipz_spark.datapipe import embedding_near_dup_pairs
 
     # synthetic embeddings are near-orthogonal (max pairwise cos ~0.51
     # at sf0.01), so the "near-dup" threshold here sits at the top of
@@ -2827,7 +2829,7 @@ WHERE round(list_cosine_similarity(a.e, b.e), 6) >= 0.4
 # exact all-pairs oracle is the ground truth, same stance as
 # dp_embed_near_dup.
 def _dp_cross_embed(spark, sf):
-    from .datapipe import cross_embedding_pairs, embedding_index
+    from pipz_spark.datapipe import cross_embedding_pairs, embedding_index
 
     emb = _t(spark, sf, "embeddings")
     new = emb.where(F.col("vec_id") < 25)
@@ -2905,7 +2907,7 @@ def _cs_pairs_long(o, li):
 
 
 def _dp_pagerank(spark, sf):
-    from .datapipe import pagerank
+    from pipz_spark.datapipe import pagerank
 
     pairs = _cs_pairs_long(_t(spark, sf, "orders"), _t(spark, sf, "lineitem"))
     edges = pairs.union(
@@ -2952,7 +2954,7 @@ SELECT node, rank_q, outdeg FROM r2
 # float is one correctly-rounded division (raw branch) or the
 # 1e-6-floored ln (linear-counting branch, DIVERGENCES #25).
 def _dp_hll_distinct(spark, sf):
-    from .datapipe import hll_distinct
+    from pipz_spark.datapipe import hll_distinct
 
     ev = _t(spark, sf, "events")
     sketch = hll_distinct(ev, "user_id", ["event_type"], b=8, out_col="hll_users")
@@ -3008,7 +3010,7 @@ JOIN (SELECT event_type, COUNT(DISTINCT user_id) AS exact_users
 # (BIT_OR) and replays every bit test, so even false positives match
 # exactly (deterministic md5 positions).
 def _dp_bloom_decontam(spark, sf):
-    from .datapipe import bloom_contamination
+    from pipz_spark.datapipe import bloom_contamination
 
     docs = _t(spark, sf, "documents")
     return bloom_contamination(
@@ -3061,7 +3063,7 @@ GROUP BY tg.doc_id
 # DIVERGENCES #25; the w·f·1e6 intermediate needs 128-bit — HUGEINT
 # in DuckDB, arbitrary-precision Python ints on the driver).
 def _dp_doremi(spark, sf):
-    from .datapipe import doremi_weights
+    from pipz_spark.datapipe import doremi_weights
 
     docs = _t(spark, sf, "documents").withColumn(
         "loss", F.col("n_chars") / F.lit(1000.0)
@@ -3105,10 +3107,10 @@ SELECT lang, mean_loss, CAST(w AS DOUBLE) / 1000000.0 AS weight FROM r3
 # also the weighted sketch's 100-TB shape: sketch the (key, mass)
 # aggregate, never the exploded occurrence stream.
 def _dp_cms_freq(spark, sf):
-    from .datapipe import cms_lookup, cms_sketch
+    from pipz_spark.datapipe import cms_lookup, cms_sketch
 
     docs = _t(spark, sf, "documents")
-    from .datapipe.text import WS
+    from pipz_spark.datapipe.text import WS
 
     toks = docs.select(
         F.explode(
@@ -3181,7 +3183,7 @@ GROUP BY 1, 2
 # computes. The 8th streaming rig: sketch-in-stream, the
 # bounded-state answer to streaming COUNT(DISTINCT).
 def _stream_hll_users(spark, sf):
-    from .streaming.streams import stream_hll_users
+    from .streams import stream_hll_users
 
     return stream_hll_users(spark, sf)
 
@@ -3228,7 +3230,7 @@ FROM fin
 # transcendentals — the oracle unrolls both power steps in HUGEINT
 # and replays every projection integer bit-for-bit (no #25 residual).
 def _dp_pca(spark, sf):
-    from .datapipe import pca_project
+    from pipz_spark.datapipe import pca_project
 
     return pca_project(_t(spark, sf, "embeddings"), iters=2)
 
@@ -3473,7 +3475,7 @@ FROM g LEFT JOIN h ON g.hour = h.hour AND g.event_type = h.event_type
 # test corpus); the oracle is the exhaustive cross all-pairs Jaccard
 # with the same length precondition.
 def _dp_cross_dedup(spark, sf):
-    from .datapipe import cross_near_dup_pairs
+    from pipz_spark.datapipe import cross_near_dup_pairs
 
     docs = _t(spark, sf, "documents")
     return cross_near_dup_pairs(
@@ -3525,7 +3527,7 @@ WHERE least(na.n, nb.n) >= 0.7 * greatest(na.n, nb.n)
 # quantize4-floored both sides; COUNT cast BIGINT per DIVERGENCES
 # #18.
 def _dp_fuzzy_decontam(spark, sf):
-    from .datapipe import cross_near_dup_pairs
+    from pipz_spark.datapipe import cross_near_dup_pairs
 
     docs = _t(spark, sf, "documents")
     ev = docs.where(F.col("doc_id") % 50 == 0)
@@ -3723,7 +3725,7 @@ def _json_variant_get(spark, sf):
 # exact equality pins both the expansion semantics and the
 # carried-column plumbing.
 def _udtf_flat_map(spark, sf):
-    from .functions import python_flat_map
+    from pipz_spark.functions import python_flat_map
 
     def split_words(text):
         # explicit whitespace class, NOT str.split(): Python splits on
@@ -3828,7 +3830,7 @@ SELECT key, 'except_all' AS op FROM (
 # exactly (sqrt snapped to DECIMAL(28,10) before the weight sum, all
 # double ops in identical order).
 def _dp_temperature(spark, sf):
-    from .datapipe import temperature_resample
+    from pipz_spark.datapipe import temperature_resample
 
     step = temperature_resample("lang-temp", "doc_id", "lang", 0.5)
     return split_ok(step(_t(spark, sf, "documents"))).select("doc_id", "lang")
@@ -3858,7 +3860,7 @@ WHERE CAST(CAST(('0x' || substring(md5(CAST(d.doc_id AS VARCHAR) || 'temp'), 1, 
 # 20-grams occurring >= 2x in the corpus; oracle replays the
 # identical md5-60 shingle frequency + window-islands pipeline.
 def _dp_repeated_spans(spark, sf):
-    from .datapipe import repeated_spans
+    from pipz_spark.datapipe import repeated_spans
 
     return repeated_spans(_t(spark, sf, "documents"), min_len=20)
 
@@ -3896,7 +3898,7 @@ FROM s GROUP BY doc_id, grp
 # window for gaps + ordered string_agg) where Spark stitches with a
 # JVM fold — different algorithms, must agree byte-for-byte.
 def _dp_clip_spans(spark, sf):
-    from .datapipe import remove_repeated_spans
+    from pipz_spark.datapipe import remove_repeated_spans
 
     out = remove_repeated_spans(_t(spark, sf, "documents"), min_len=20)
     return out.select(
@@ -3964,7 +3966,7 @@ LEFT JOIN clean c ON d.doc_id = c.doc_id
 # surviving lines. All-integer/string surface — no float, no widened
 # aggregate (counts are COUNT(*) FILTER, cast INTEGER).
 def _dp_line_dedup(spark, sf):
-    from .datapipe import line_dedup
+    from pipz_spark.datapipe import line_dedup
 
     return line_dedup(_t(spark, sf, "documents"), line_words=8)
 
@@ -4015,7 +4017,7 @@ _BM25_QUERIES: list[tuple[int, str]] = [
 
 
 def _dp_bm25(spark, sf):
-    from .datapipe import bm25_topk
+    from pipz_spark.datapipe import bm25_topk
 
     return bm25_topk(_t(spark, sf, "documents"), _BM25_QUERIES, k=10)
 
@@ -4090,7 +4092,7 @@ FROM rnk WHERE rank <= 10
 # trajectory replays round-for-round (ties on id). The oracle
 # unrolls the 4 rounds over the same candidate CTE.
 def _dp_mmr(spark, sf):
-    from .datapipe import cosine_topk_bruteforce, mmr_rerank
+    from pipz_spark.datapipe import cosine_topk_bruteforce, mmr_rerank
 
     emb = _t(spark, sf, "embeddings")
     cands = cosine_topk_bruteforce(
@@ -4159,7 +4161,7 @@ UNION ALL SELECT qid, nid, CAST(4 AS INT), sc FROM s4
 # input rankings (the dp_bm25 and dp_cosine_topk machines verbatim)
 # plus the fusion bit-for-bit.
 def _dp_rrf_fusion(spark, sf):
-    from .datapipe import bm25_topk, cosine_topk_bruteforce, rrf_fuse
+    from pipz_spark.datapipe import bm25_topk, cosine_topk_bruteforce, rrf_fuse
 
     lex = bm25_topk(_t(spark, sf, "documents"), _BM25_QUERIES, k=10)
     emb = _t(spark, sf, "embeddings")
@@ -4265,7 +4267,7 @@ FROM r WHERE rank <= 10
 # symbol-to-word ratio. One row per INPUT doc (blank text: 0 words,
 # NULL metrics, keep=false). Ratios quantize4-floored both sides.
 def _dp_gopher(spark, sf):
-    from .datapipe import gopher_quality
+    from pipz_spark.datapipe import gopher_quality
 
     return gopher_quality(_t(spark, sf, "documents"))
 
@@ -4324,7 +4326,7 @@ FROM q
 # short-doc whole-text fallback), so this df IS the df the dedup
 # cap reasons about. All-integer/string output.
 def _dp_top_ngrams(spark, sf):
-    from .datapipe import top_ngrams
+    from pipz_spark.datapipe import top_ngrams
 
     return top_ngrams(_t(spark, sf, "documents"), n=3, k=100)
 
@@ -4357,13 +4359,13 @@ FROM r WHERE rank <= 100
 # behavioral). COUNT is CAST BIGINT per DIVERGENCES #18 discipline;
 # both engines run the identical RE2/Java-compatible alternation.
 def _dp_pretoken_hist(spark, sf):
-    from .datapipe import pretoken_topk
+    from pipz_spark.datapipe import pretoken_topk
 
     return pretoken_topk(_t(spark, sf, "documents"), k=100)
 
 
 def _pretoken_sql() -> str:
-    from .datapipe.bpe import PRETOKEN_PATTERN
+    from pipz_spark.datapipe.bpe import PRETOKEN_PATTERN
 
     return rf"""
 WITH w AS (
@@ -4392,7 +4394,7 @@ _MIX_SHARES = {"en": 0.4, "de": 0.2, "fr": 0.2, "es": 0.1, "zh": 0.1}
 
 
 def _dp_mixture_resample(spark, sf):
-    from .datapipe import mixture_resample, token_count
+    from pipz_spark.datapipe import mixture_resample, token_count
 
     counted = token_count()(_t(spark, sf, "documents"))
     step = mixture_resample(
@@ -4432,7 +4434,7 @@ _DP_MIXTURE_SQL = _mix_sql()
 # cumsum (256 hash-prefix buckets + driver offsets + within-bucket
 # window) against the oracle's single global window.
 def _dp_budget_cap(spark, sf):
-    from .datapipe import token_budget_cap, token_count
+    from pipz_spark.datapipe import token_budget_cap, token_count
 
     step = token_budget_cap("budget", budget=15000)
     counted = token_count()(_t(spark, sf, "documents"))
@@ -4461,7 +4463,7 @@ FROM c WHERE cum <= 15000
 # identically on any run, cluster size, or engine. The SHARDED form —
 # one hash shuffle + per-shard sort — never a global total sort.
 def _dp_shuffle(spark, sf):
-    from .datapipe import deterministic_shuffle
+    from pipz_spark.datapipe import deterministic_shuffle
 
     return deterministic_shuffle(
         _t(spark, sf, "documents"), "doc_id", n_shards=64
@@ -4492,7 +4494,7 @@ FROM h
 # Suri-Vassilvitskii "last reducer" fix. Exact integer counting;
 # the oracle replays the identical orientation and joins.
 def _dp_triangles(spark, sf):
-    from .datapipe import triangle_count
+    from pipz_spark.datapipe import triangle_count
 
     # deterministic 1-in-5 order slice: the full co-occurrence graph
     # is DENSE (41M wedges at sf0.1 — the graph100x rig stresses it);
@@ -4559,7 +4561,7 @@ _DP_TRIANGLES_SQL = (
 # extra degree aggregate + left join. Template cliques sit near 1,
 # chance collisions near 0 — the near-dup graph diagnostic.
 def _dp_clustering(spark, sf):
-    from .datapipe import clustering_coefficient
+    from pipz_spark.datapipe import clustering_coefficient
 
     li = (
         _t(spark, sf, "lineitem")
@@ -4598,7 +4600,7 @@ FROM deg LEFT JOIN tri ON tri.node = deg.n
 # 3 rounds; the oracle replays them as three join + GROUP BY MIN
 # layers. No arithmetic at all — pure ordered-domain MIN.
 def _dp_labelprop(spark, sf):
-    from .datapipe import propagate_min_labels
+    from pipz_spark.datapipe import propagate_min_labels
 
     o = _t(spark, sf, "orders")
     li = _t(spark, sf, "lineitem")
@@ -4646,7 +4648,7 @@ SELECT node, label FROM l3
 # Oracle = 3 unrolled rounds of neighbor-vote counts + window argmax
 # (the engine's struct-MIN argmax is semantically that rank-1 row).
 def _dp_label_prop(spark, sf):
-    from .datapipe import label_propagation
+    from pipz_spark.datapipe import label_propagation
 
     o = _t(spark, sf, "orders")
     li = _t(spark, sf, "lineitem")
@@ -4711,7 +4713,7 @@ SELECT node, label FROM l3
 # rounds. Seeds with no edges still appear at hops 0 (a seed is a
 # claim about the node, not its adjacency).
 def _dp_bfs_hops(spark, sf):
-    from .datapipe import bfs_hops
+    from pipz_spark.datapipe import bfs_hops
 
     pairs = _cs_pairs_long(_t(spark, sf, "orders"), _t(spark, sf, "lineitem"))
     seeds = (
@@ -4757,7 +4759,7 @@ SELECT node, hops FROM d3
 # and rejected for this query: every supplier pair shares ≥3
 # customers at both SFs — a saturated gate on 8 s of wedges.)
 def _dp_link_predict(spark, sf):
-    from .datapipe import common_neighbor_pairs
+    from pipz_spark.datapipe import common_neighbor_pairs
 
     li = _t(spark, sf, "lineitem")
     # distinct below the injective concat — (int, int) dedup exchange,
@@ -4810,7 +4812,7 @@ JOIN deg db ON db.n = n.id_b
 # customer. Pure integer min-plus; oracle = 3 unrolled MIN(cost+w)
 # rounds over the weighted edge list.
 def _dp_sssp(spark, sf):
-    from .datapipe import sssp_cost
+    from pipz_spark.datapipe import sssp_cost
 
     o = _t(spark, sf, "orders")
     li = _t(spark, sf, "lineitem")
@@ -4865,7 +4867,7 @@ SELECT node, cost FROM d3
 # replays selection relationally: window MIN over a rows-frame +
 # rightmost join-back.
 def _dp_winnow(spark, sf):
-    from .datapipe import winnow_fingerprints
+    from pipz_spark.datapipe import winnow_fingerprints
 
     return winnow_fingerprints(
         _t(spark, sf, "documents"), k=3, w=4
@@ -4912,7 +4914,7 @@ SELECT DISTINCT doc_id, fp_hash, CAST(fp_pos AS INT) AS fp_pos FROM sel
 # the batch sketch the oracle replays. 10th streaming machine; state
 # capped at days × depth × width rows at ANY stream volume.
 def _stream_cms_traffic(spark, sf):
-    from .streaming.streams import stream_cms_traffic
+    from .streams import stream_cms_traffic
 
     return stream_cms_traffic(spark, sf)
 
@@ -4960,7 +4962,7 @@ GROUP BY 1, 2
 # kmeans-initial-centroid stance), so the oracle independently
 # replays every Σ xq_d·s_jd integer.
 def _dp_jl_project(spark, sf):
-    from .datapipe import jl_project
+    from pipz_spark.datapipe import jl_project
 
     return jl_project(
         _t(spark, sf, "embeddings"), d_out=8
@@ -4968,7 +4970,7 @@ def _dp_jl_project(spark, sf):
 
 
 def _jl_sql() -> str:
-    from .datapipe import jl_signs
+    from pipz_spark.datapipe import jl_signs
 
     signs = jl_signs(64, 8)
     rows = ",\n  ".join(
@@ -5001,7 +5003,7 @@ _DP_JL_SQL = _jl_sql()
 # oracle replays all three register sets and the identical
 # finalization (the dp_hll_distinct machinery × 3).
 def _dp_hll_overlap(spark, sf):
-    from .datapipe import hll_intersect_estimate
+    from pipz_spark.datapipe import hll_intersect_estimate
 
     ev = _t(spark, sf, "events").where(F.col("user_id").isNotNull())
     est = hll_intersect_estimate(ev, "user_id", "event_type", "click", "view", b=8)
@@ -5078,8 +5080,8 @@ _DP_HLL_OVERLAP_SQL = _hll_overlap_sql()
 # crossing rule, and the ceil-target quantile lookup in window SQL;
 # every comparison is BIGINT (values pass through untouched).
 def _dp_kll_quantiles(spark, sf):
-    from .datapipe import kll_merge, kll_quantile, kll_sketch
-    from .core.caches import track
+    from pipz_spark.datapipe import kll_merge, kll_quantile, kll_sketch
+    from pipz_spark.core.caches import track
 
     li = _t(spark, sf, "lineitem").select(
         "l_returnflag",
@@ -5165,7 +5167,7 @@ SELECT l_returnflag, q, kll_quantile, CAST(kll_n AS BIGINT) AS kll_n FROM mg
 # division of an exactly-representable numerator. The oracle replays
 # hashes, ranks, the shared threshold and all four doubles.
 def _dp_theta_diff(spark, sf):
-    from .datapipe.sketches import kmv_set_estimates, kmv_sketch
+    from pipz_spark.datapipe.sketches import kmv_set_estimates, kmv_sketch
 
     orders = _t(spark, sf, "orders")
     cutoff = F.lit("1998-01-01").cast("timestamp_ntz")
@@ -5232,7 +5234,7 @@ FROM agg
 # and xor from the text characters (printable-ASCII sanitized in
 # BOTH engines, so char codepoints ARE the payload bytes).
 def _dp_image_near_dup(spark, sf):
-    from .datapipe.multimodal import image_near_dup
+    from pipz_spark.datapipe.multimodal import image_near_dup
 
     docs = _t(spark, sf, "documents")
     s = F.regexp_replace(
@@ -5310,8 +5312,8 @@ WHERE hamming <= 3
 # top 10. Everything BIGINT with a total-order tie rule, so the
 # oracle replays build, merge, offsets and ranks row-for-row.
 def _dp_heavy_hitters(spark, sf):
-    from .datapipe._util import fan_out
-    from .datapipe.sketches import mg_merge, mg_summary, mg_topk
+    from pipz_spark.datapipe._util import fan_out
+    from pipz_spark.datapipe.sketches import mg_merge, mg_summary, mg_topk
 
     # fan_out BEFORE the explode (r16 perf pass): the tokenize +
     # explode + map-side partial count all run in the scan stage, and
@@ -5380,7 +5382,7 @@ QUALIFY mg_rank <= 10
 # id − row_number), which is precisely why this graph can gate a
 # fixpoint algorithm exactly.
 def _dp_cc_contract(spark, sf):
-    from .datapipe import connected_components
+    from pipz_spark.datapipe import connected_components
 
     k = (
         _t(spark, sf, "part")
@@ -5416,7 +5418,7 @@ _BLOCKLIST = ("slow", "skew", "spill", "nosuchword")
 
 
 def _dp_blocklist(spark, sf):
-    from .datapipe import blocklist_report
+    from pipz_spark.datapipe import blocklist_report
 
     return blocklist_report(_t(spark, sf, "documents"), _BLOCKLIST)
 
@@ -5452,7 +5454,7 @@ _DP_BLOCKLIST_SQL = _blocklist_sql()
 # convention); pairs with ≥ 2 shared prints (damping single-gram
 # chance collisions).
 def _dp_winnow_overlap(spark, sf):
-    from .datapipe import winnow_fingerprints, winnow_overlap
+    from pipz_spark.datapipe import winnow_fingerprints, winnow_overlap
 
     docs = _t(spark, sf, "documents")
     train = docs.where(F.col("doc_id") % 50 != 0)
@@ -5517,8 +5519,8 @@ HAVING COUNT(*) >= 2
 # operating point (split % 40, min_shared=1, cap 32); the oracle is
 # index-free because persistence is value-neutral.
 def _dp_cross_winnow(spark, sf):
-    from ._scratch import scratch_dir
-    from .datapipe import winnow_fingerprints, winnow_overlap
+    from .scratch import scratch_dir
+    from pipz_spark.datapipe import winnow_fingerprints, winnow_overlap
 
     docs = _t(spark, sf, "documents")
     idx_dir = scratch_dir("pipz_winnow_index_")
@@ -5554,7 +5556,7 @@ HAVING COUNT(*) >= 1
 # replays n·lnq(n) − Σ c·lnq(c) exactly and performs the same single
 # division.
 def _dp_token_entropy(spark, sf):
-    from .datapipe import token_entropy
+    from pipz_spark.datapipe import token_entropy
 
     return token_entropy(_t(spark, sf, "documents"))
 
@@ -5589,7 +5591,7 @@ FROM documents d LEFT JOIN agg a ON a.doc_id = d.doc_id
 # per day. The oracle replays quantization, histogram, the
 # crossing-rule compaction, and the ceil-target lookup.
 def _stream_kll(spark, sf):
-    from .streaming.streams import stream_kll_values
+    from .streams import stream_kll_values
 
     return stream_kll_values(spark, sf)
 
@@ -5629,7 +5631,7 @@ FROM mk, qs GROUP BY 1, 2
 # negatives — the oracle REPLAYS every bit test rather than assuming
 # the theorem) plus the day's set-bit fill.
 def _stream_bloom(spark, sf):
-    from .streaming.streams import stream_bloom_signatures
+    from .streams import stream_bloom_signatures
 
     return stream_bloom_signatures(spark, sf)
 
@@ -5644,7 +5646,7 @@ def _stream_bloom(spark, sf):
 # store-wide top 5. The oracle replays counts, both prunes, offsets
 # and ranks.
 def _stream_heavy_hitters(spark, sf):
-    from .streaming.streams import stream_heavy_hitters
+    from .streams import stream_heavy_hitters
 
     return stream_heavy_hitters(spark, sf)
 
@@ -5682,7 +5684,7 @@ QUALIFY mg_rank <= 5
 
 
 # The 14th streaming machine and the set-algebra member of the
-# sketch-in-stream family (streaming/streams.py:stream_theta_users):
+# sketch-in-stream family (oracle_suite/streams.py:stream_theta_users):
 # per-day bottom-64 distinct user-hash sample as CUSTOM bounded
 # state (applyInPandasWithState — built-in folds can't express a
 # k-th order statistic), state ≤ k BIGINT hashes per day by the KMV
@@ -5691,7 +5693,7 @@ QUALIFY mg_rank <= 5
 # kmv_sketch and the oracle replays the hashes + the exact-below-k /
 # (k−1)·2^52/θ estimate directly.
 def _stream_theta_users(spark, sf):
-    from .streaming.streams import stream_theta_users
+    from .streams import stream_theta_users
 
     return stream_theta_users(spark, sf)
 
@@ -5757,7 +5759,7 @@ FROM agg a JOIN fl ON fl.day = a.day
 # round is one map-side-combined degree count + two semi-joins; the
 # oracle replays the rounds as join+filter layers.
 def _dp_kcore(spark, sf):
-    from .datapipe import kcore_peel
+    from pipz_spark.datapipe import kcore_peel
 
     li = (
         _t(spark, sf, "lineitem")
@@ -5809,7 +5811,7 @@ SELECT s AS node, CAST(COUNT(*) AS BIGINT) AS degree FROM e3 GROUP BY s
 # (the dp_kcore slicing convention); the FULL graph's pair plan is
 # already bench-gated by dp_trustrank / dp_pagerank_weighted.
 def _dp_hits(spark, sf):
-    from .datapipe import hits
+    from pipz_spark.datapipe import hits
 
     o = _t(spark, sf, "orders").where(F.col("o_orderkey") % 3 == 0)
     li = _t(spark, sf, "lineitem")
@@ -5849,7 +5851,7 @@ LEFT JOIN h2 ON h2.node = n.node
 # IEEE chains quantized by the module's floor rule, replayed
 # term-for-term by the oracle.
 def _dp_readability(spark, sf):
-    from .datapipe import readability_scores
+    from pipz_spark.datapipe import readability_scores
 
     return readability_scores(_t(spark, sf, "documents"))
 
@@ -5889,7 +5891,7 @@ FROM t
 # seed-based corpus-quality signal. Same integer-exact Pregel
 # machine; the oracle unrolls both iterations with the seed CASE.
 def _dp_trustrank(spark, sf):
-    from .datapipe import pagerank
+    from pipz_spark.datapipe import pagerank
 
     pairs = _cs_pairs_long(_t(spark, sf, "orders"), _t(spark, sf, "lineitem"))
     edges = pairs.union(
@@ -5945,7 +5947,7 @@ SELECT node, rank_q, outdeg FROM r2
 # BOTH branches across SFs: at sf0.001 total supply < budget (all
 # full), at sf0.01+ the level binds.
 def _dp_waterfill(spark, sf):
-    from .datapipe import token_count, waterfill_allocation
+    from pipz_spark.datapipe import token_count, waterfill_allocation
 
     flat = split_ok(token_count()(_t(spark, sf, "documents")))
     return waterfill_allocation(flat, 15000, "lang", "n_tokens")
@@ -5996,7 +5998,7 @@ FROM cr
 # becomes out-strength Σw. The oracle unrolls both iterations with
 # the weighted split.
 def _dp_pagerank_weighted(spark, sf):
-    from .datapipe import pagerank
+    from pipz_spark.datapipe import pagerank
 
     o = _t(spark, sf, "orders")
     li = _t(spark, sf, "lineitem")

@@ -36,7 +36,7 @@ from .core import (
 )
 from .session import get_session
 
-__version__ = "0.1.0"
+__version__ = "0.2.0"
 
 __all__ = [
     "ERROR_COL",

@@ -220,20 +220,21 @@ def _bucket_pairs(bucketed: DataFrame, keys: list[str], max_bucket: int) -> Data
     """(id_a < id_b) pairs co-bucketed on ``keys``, EXHAUSTIVE and
     skew-safe, in one lazy plan with no join and no action.
 
-    One aggregation builds the sorted id list per bucket; the list is
-    cut into chunks of ``max_bucket`` ids and every chunk pair
-    (i <= j) becomes one CELL row holding the two slices. The cells
-    are spread by an exchange on (bucket key, i, j), then each cell
-    expands IN-ARRAY: the p < q positions of its chunk when i = j,
-    the full cross product when i < j (ids are sorted, so every pair
-    comes out as id_a < id_b). A small bucket is one cell, so the
-    common case is the plain in-array expansion; a hot bucket of k
-    ids becomes ~(k/max_bucket)²/2 cells of at most max_bucket² pairs
-    each — a DETERMINISTIC split of its k² output, not a hope that AQE
-    notices (it would not: skew splitting reads shuffle INPUT bytes,
-    and a hot bucket's input is k skinny ids while its OUTPUT is k²
-    pairs). A viral boilerplate cluster costs what it costs, spread
-    across tasks, rather than losing genuine near-dup pairs or
+    One aggregation builds the sorted DISTINCT id list per bucket (a
+    caller frame may repeat an id, and a repeated id must not pair
+    with itself); the list is cut into chunks of ``max_bucket`` ids
+    and every chunk pair (i <= j) becomes one CELL row holding the two
+    slices. The cells are spread by an exchange on (bucket key, i, j),
+    then each cell expands IN-ARRAY: the p < q positions of its chunk
+    when i = j, the full cross product when i < j (ids are sorted, so
+    every pair comes out as id_a < id_b). A small bucket is one cell,
+    so the common case is the plain in-array expansion; a hot bucket
+    of k ids becomes ~(k/max_bucket)²/2 cells of at most max_bucket²
+    pairs each — a DETERMINISTIC split of its k² output, not a hope
+    that AQE notices (it would not: skew splitting reads shuffle INPUT
+    bytes, and a hot bucket's input is k skinny ids while its OUTPUT
+    is k² pairs). A viral boilerplate cluster costs what it costs,
+    spread across tasks, rather than losing genuine near-dup pairs or
     serializing k² in one task.
 
     ``max_bucket`` is therefore the split size, never a recall cap,
@@ -241,7 +242,7 @@ def _bucket_pairs(bucketed: DataFrame, keys: list[str], max_bucket: int) -> Data
     m = max_bucket
     grouped = (
         bucketed.groupBy(*keys)
-        .agg(F.array_sort(F.collect_list("_id")).alias("ids"))
+        .agg(F.array_sort(F.collect_set("_id")).alias("ids"))
         .where(F.size("ids") >= 2)
     )
     ids = F.col("ids")
@@ -575,6 +576,12 @@ def near_dup_pairs(
     estimate_filter: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, Jaccard-verified.
+
+    Pairs are between DISTINCT ids, each once as (id_a < id_b): an id
+    that repeats in ``df`` never pairs with itself. The same holds for
+    every operator built on the bucket expansion
+    (``lsh_candidate_pairs``, ``jaccard_near_dup_pairs``,
+    ``simhash_near_dup_pairs``, ``image_near_dup``).
 
     Default banding 24x5 puts the LSH S-curve threshold at
     (1/24)^(1/5) = 0.53: ~99% recall for Jaccard >= 0.7 pairs while

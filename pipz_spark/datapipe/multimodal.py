@@ -80,9 +80,8 @@ _IMG_FEATURES_COLS = "n_bytes long, mean_byte double, byte_entropy_bucket int"
 
 def pil_available() -> bool:
     """Optional-dependency probe: True when Pillow imports. Probed,
-    never assumed — this container ships without media libraries, so
-    the decode path is selected at call time (same pattern as the
-    protobuf gate on the state-v2 streaming twin)."""
+    never assumed — an environment may ship without media libraries,
+    so the decode path is selected at call time."""
     try:
         from PIL import Image  # noqa: F401
 

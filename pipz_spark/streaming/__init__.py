@@ -13,21 +13,9 @@ wrapping (breaker/limiter around the sink action).
 from .streams import (
     dedupe_stream,
     read_events_stream,
-    replay_events_files,
     run_step_stream,
     running_totals,
-    running_totals_tws,
     session_window_agg,
-    stream_events_dedup,
-    stream_ingest_dedup,
-    stream_events_hourly,
-    stream_events_join,
-    stream_bloom_signatures,
-    stream_cms_traffic,
-    stream_kll_values,
-    stream_events_sessions,
-    stream_running_totals,
-    stream_static_join,
     stream_stream_join,
     windowed_agg,
 )
@@ -35,21 +23,9 @@ from .streams import (
 __all__ = [
     "dedupe_stream",
     "read_events_stream",
-    "replay_events_files",
     "run_step_stream",
     "running_totals",
-    "running_totals_tws",
     "session_window_agg",
-    "stream_events_dedup",
-    "stream_ingest_dedup",
-    "stream_events_hourly",
-    "stream_events_join",
-    "stream_bloom_signatures",
-    "stream_cms_traffic",
-    "stream_kll_values",
-    "stream_events_sessions",
-    "stream_running_totals",
-    "stream_static_join",
     "stream_stream_join",
     "windowed_agg",
 ]

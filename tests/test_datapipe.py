@@ -352,11 +352,10 @@ def test_decode_image_features_stub(documents):
 
 
 def test_decode_image_features_pil_path(spark):
-    # skip-gated like the protobuf state-v2 twin: runs wherever
-    # Pillow is installed, silently skips here. Same output schema as
-    # the bytes mode; mean_byte becomes the mean pixel of the decoded
-    # grayscale 32×32 image, and a non-image payload falls back to
-    # byte stats instead of failing the scan.
+    # skip-gated: runs wherever Pillow is installed, skips elsewhere.
+    # Same output schema as the bytes mode; mean_byte becomes the mean
+    # pixel of the decoded grayscale 32×32 image, and a non-image
+    # payload falls back to byte stats instead of failing the scan.
     PIL = pytest.importorskip("PIL")
     import io
 
@@ -887,6 +886,30 @@ def test_near_dup_operators_compose_without_running_a_job(spark, documents):
     finally:
         release_caches()
     assert jobs == dict.fromkeys(builds, 0)
+
+
+def test_near_dup_operators_ignore_repeated_ids(spark, documents):
+    # a frame that repeats some rows (same doc_id, same content) must
+    # give exactly the pairs of the frame without the repeats: pairs
+    # are between distinct ids, so a repeated id never pairs with itself
+    from pipz_spark.datapipe import jaccard_near_dup_pairs
+    from pipz_spark.datapipe.multimodal import image_near_dup
+
+    def images(df):
+        blob = F.encode(F.coalesce("text", F.lit("")), "utf-8").alias("blob")
+        return image_near_dup(df.select("doc_id", blob))
+
+    repeated = documents.unionByName(documents.where(F.col("doc_id") % 7 == 0))
+    for name, op in {
+        "near_dup_pairs": near_dup_pairs,
+        "lsh_candidate_pairs": lsh_candidate_pairs,
+        "jaccard_near_dup_pairs": jaccard_near_dup_pairs,
+        "simhash_near_dup_pairs": simhash_near_dup_pairs,
+        "image_near_dup": images,
+    }.items():
+        got = {tuple(r) for r in op(repeated).collect()}
+        assert all(r[0] < r[1] for r in got), name
+        assert got == {tuple(r) for r in op(documents).collect()}, name
 
 
 def test_deterministic_shuffle_stable_and_contiguous(spark, documents):
@@ -1617,11 +1640,8 @@ def test_bpe_oracle_agrees_on_control_char_text():
 
     import duckdb
 
-    from pipz_spark.datapipe.bpe import (
-        encode_text,
-        load_merges,
-        oracle_sql,
-    )
+    from oracle_suite.bpe import oracle_sql
+    from pipz_spark.datapipe.bpe import encode_text, load_merges
 
     merges = load_merges()
     ranks = {p: i for i, p in enumerate(merges)}
@@ -1652,7 +1672,8 @@ def test_bpe_merges_parsing_rules(tmp_path):
     # zero merges must still yield a runnable (per-char) oracle
     import duckdb
 
-    from pipz_spark.datapipe.bpe import encode_word, load_merges, oracle_sql
+    from oracle_suite.bpe import oracle_sql
+    from pipz_spark.datapipe.bpe import encode_word, load_merges
 
     p = tmp_path / "m.txt"
     p.write_text("#version: test\n# #\na b\n")
@@ -1879,7 +1900,7 @@ def test_repeated_spans_short_docs_yield_nothing(spark):
         (4, 1, 25)
     ]
     # engine-vs-engine on a corpus CONTAINING short docs
-    from pipz_spark.queries import QUERIES
+    from oracle_suite.queries import QUERIES
 
     con = duckdb.connect()
     con.execute("CREATE TABLE documents(doc_id BIGINT, text VARCHAR)")

@@ -246,3 +246,36 @@ def test_run_step_stream_zero_row_trigger_emits_zero_counts(spark, tmp_path):
     )
     _run(q, lambda: len(seen) >= 2)
     assert [(f["ok"], f["dead_letter"]) for f in seen[:2]] == [(0, 0), (0, 0)]
+
+
+def test_run_step_stream_never_writes_session_conf(spark, tmp_path, monkeypatch):
+    # starting and draining a stream leaves the shared session's conf
+    # alone: another thread's query must never plan under values a
+    # stream start put there for a while
+    from pyspark.sql.conf import RuntimeConfig
+
+    stream = _file_stream(spark, tmp_path)
+    sets: list[tuple] = []
+    real_set = RuntimeConfig.set
+
+    def record(self, key, value):
+        sets.append((key, value))
+        real_set(self, key, value)
+
+    monkeypatch.setattr(RuntimeConfig, "set", record)
+    sunk, ok_sink, dead_sink = _sinks()
+    bus = SignalBus()
+    bus.on(S.SEQUENCE_COMPLETED, lambda sig, f: None)
+    q = run_step_stream(
+        stream,
+        _gate(),
+        ok_sink,
+        dead_sink,
+        breaker=CircuitBreaker("landing-conf", failure_threshold=3, reset_timeout=30.0),
+        checkpoint=str(tmp_path / "ckpt"),
+        query_name="pipz-landing-conf",
+        output_mode="append",
+        bus=bus,
+    )
+    _run(q, lambda: sum(sunk["ok"].values()) + sum(sunk["dead_letter"].values()) >= 60)
+    assert sets == []

@@ -1,4 +1,4 @@
-"""Unit gate for pipz_spark.testing.oracle — the r8 masking-hole fix.
+"""Unit gate for oracle_suite.oracle — the r8 masking-hole fix.
 
 CORRECTNESS_r08 proved the local value-compare gates are blind to
 DuckDB's integer-SUM widening (HUGEINT) while the driver's value-hash
@@ -14,7 +14,7 @@ from __future__ import annotations
 import duckdb
 import pytest
 
-from pipz_spark.testing.oracle import type_parity_issues
+from oracle_suite.oracle import type_parity_issues
 
 from pyspark.sql import types as T
 
@@ -90,7 +90,7 @@ def test_schema_gate_owns_missing_columns(con):
 
 
 def test_relation_wrapper_with_spark_schema(con):
-    from pipz_spark.testing.oracle import relation_type_issues
+    from oracle_suite.oracle import relation_type_issues
 
     rel = con.sql("SELECT SUM(x) AS n FROM (SELECT CAST(1 AS BIGINT) AS x)")
     schema = T.StructType([T.StructField("n", T.LongType())])
@@ -107,7 +107,7 @@ def test_every_registry_oracle_is_widening_free(con):
     before shipping; f-string-built oracles and CLUSTER_PAIR_ORACLES
     are included because we enumerate at runtime, not statically.
     """
-    from pipz_spark.queries import CLUSTER_PAIR_ORACLES, QUERIES
+    from oracle_suite.queries import CLUSTER_PAIR_ORACLES, QUERIES
 
     from conftest import SF_DIR
     from pipz_spark.sources.catalog import TABLES

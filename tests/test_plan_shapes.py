@@ -15,7 +15,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from pipz_spark.queries import QUERIES
+from oracle_suite.queries import QUERIES
 
 from conftest import SF_DIR
 

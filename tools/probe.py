@@ -26,7 +26,7 @@ import pandas as pd  # module-level: pandas_udf type hints must resolve globally
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pipz_spark.datapipe import release_caches  # noqa: E402
-from pipz_spark.queries import QUERIES  # noqa: E402
+from oracle_suite.queries import QUERIES  # noqa: E402
 from pipz_spark.session import get_session  # noqa: E402
 
 
@@ -61,7 +61,7 @@ def main() -> None:
         "noop"
     ).mode("overwrite").save()
     if any(q.startswith("stream_") for q in args.queries):
-        from pipz_spark.streaming.streams import replay_events_files
+        from oracle_suite.streams import replay_events_files
 
         replay_events_files(spark, sf_dir, order_by_ts=True)
 

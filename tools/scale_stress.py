@@ -325,8 +325,8 @@ def main_stream100x() -> None:
 
         PYTHONPATH=/root/repo python tools/scale_stress.py stream100x
     """
-    from pipz_spark.queries import QUERIES
-    from pipz_spark.streaming import streams as streams_mod
+    from oracle_suite.queries import QUERIES
+    from oracle_suite import streams as streams_mod
 
     spark = get_session(
         "pipz-scale-stress-stream100x", extra_conf={"spark.ui.enabled": "true"}
@@ -917,7 +917,7 @@ def main() -> None:
     # must NOT shuffle; z is computed in the scan projection after
     # the broadcast join). The EXACT declared-query builder runs here
     # (shared helper) so the stress evidence measures the gated plan.
-    from pipz_spark.queries import build_anomaly_z
+    from oracle_suite.queries import build_anomaly_z
 
     run(spark, "events_anomaly     ",
         lambda: build_anomaly_z(ev10x).count())

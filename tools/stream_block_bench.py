@@ -16,7 +16,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pipz_spark.queries import QUERIES  # noqa: E402
+from oracle_suite.queries import QUERIES  # noqa: E402
 from pipz_spark.session import get_session  # noqa: E402
 
 
@@ -36,12 +36,12 @@ def main() -> None:
     spark.range(100).write.mode("overwrite").parquet(
         os.path.join(tempfile.mkdtemp(prefix="pipz_bench_warm_"), "w.parquet")
     )
-    from pipz_spark.streaming.streams import replay_events_files
+    from oracle_suite.streams import replay_events_files
 
     replay_events_files(spark, sf_dir, order_by_ts=True)
 
     # mirror bench.py's heaviest-first submission: starts serialize on
-    # _START_LOCK, so the pacing rig must enter the pool first
+    # drain_stream's start lock, so the pacing rig must enter the pool first
     history = {}
     try:
         with open(os.path.join(os.path.dirname(os.path.dirname(

@@ -23,7 +23,7 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def main() -> None:
-    from pipz_spark.queries import QUERIES
+    from oracle_suite.queries import QUERIES
 
     rounds: dict[int, dict] = {}
     for path in sorted(glob.glob(os.path.join(REPO, "CORRECTNESS_r*.json"))):
