@@ -9,13 +9,17 @@ text) are split into fixed-size chunk cells so one degenerate bucket
 cannot quadratically blow up a partition — the standard skew guard
 for LSH joins.
 
-String work (shingling, base hashing) stays JVM-side in whole-stage
-codegen; the dense (a*h + b) mod p minima run as Arrow-batched numpy
-— each layer where it is fastest, nothing row-at-a-time in Python.
+The signature is one Arrow-batched UDF straight from the text: code
+points → k-wide window hashes → distinct → dense (a*h + b) mod p
+minima in numpy. Spark evaluates array lambdas (``transform``,
+``aggregate``) interpreted, element by element, so shingling there
+cost more than the minima it fed. The exact verify keeps
+``char_shingles``, the definition the DuckDB oracles share.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import Column, DataFrame, Window
@@ -126,29 +130,54 @@ def _hash_family(num_hashes: int, seed: int = 42) -> tuple[list[int], list[int]]
 _PRIME_GT_32 = 4294967311
 
 
-def _minhash_expr(shingles: Column, num_hashes: int) -> Column:
-    """Row-local MinHash (ONE fold over the shingle array) — used when
-    attaching a signature column without a shuffle. Each shingle is
-    hashed ONCE (xxhash64 → 32 bits); the num_hashes family derives
-    via literal-array linear transforms a_j*h + b_j (standard
-    single-hash construction; coefficients sized to stay under 2^62,
-    ANSI-overflow-safe)."""
+# window hash constants: XOR each code point into a 64-bit state and
+# multiply by an odd constant (FNV-1a's shape, over code points, with
+# the golden-ratio multiplier). Fixed integers, so every worker
+# process computes the same value — never Python's salted hash()
+_WINDOW_SEED = np.uint64(0xCBF29CE484222325)
+_WINDOW_MUL = np.uint64(0x9E3779B97F4A7C15)
+_LOW32 = np.uint64(0xFFFFFFFF)
+
+
+def _shingle_hashes(text: str, k: int) -> np.ndarray:
+    """Distinct 32-bit hashes (int64) of ``char_shingles(text, k)``:
+    the same code-point windows (a text shorter than k is one
+    whole-text shingle, ``""`` one empty shingle), each folded into a
+    64-bit state whose high half is xor-shifted onto the low one and
+    cut to 32 bits — so a_j * h + b_j stays under 2^62."""
+    cps = np.frombuffer(text.encode("utf-32-le", "surrogatepass"), dtype="<u4")
+    cps = cps.astype(np.uint64)
+    n = max(len(cps) - k + 1, 1)
+    state = np.full(n, _WINDOW_SEED, dtype=np.uint64)
+    for j in range(min(k, len(cps))):
+        state = (state ^ cps[j:j + n]) * _WINDOW_MUL
+    return np.unique((state ^ (state >> np.uint64(32))) & _LOW32).astype(np.int64)
+
+
+def _minhash_udf(num_hashes: int, shingle_k: int):
+    """THE MinHash signature: an Arrow-batched UDF from text to
+    array<bigint> of ``num_hashes`` minima of (a_j * h + b_j) mod p
+    over the text's distinct shingle hashes, one (num_hashes x
+    n_shingles) broadcasted multiply-min per document. NULL text gets
+    the all-``_MAXLONG`` sentinel, which no real minimum (< p) can
+    equal; ``banded_signatures`` drops it, so a NULL doc is never a
+    candidate. Every signature path (the ``minhash_signature`` Step,
+    ``minhash_signatures_df`` and so ``cross_near_dup_pairs``) calls
+    this one function."""
     a_co, b_co = _hash_family(num_hashes)
-    a_arr = F.array(*[F.lit(a).cast("long") for a in a_co])
-    b_arr = F.array(*[F.lit(b).cast("long") for b in b_co])
-    init = F.array_repeat(F.lit(_MAXLONG).cast("long"), num_hashes)
-    base_hashes = F.transform(
-        shingles, lambda s: F.xxhash64(s).bitwiseAND(F.lit(4294967295).cast("long"))
-    )
-    return F.aggregate(
-        base_hashes,
-        init,
-        lambda acc, h: F.zip_with(
-            acc,
-            F.zip_with(a_arr, b_arr, lambda a, b: (a * h + b) % F.lit(_PRIME_GT_32)),
-            lambda x, y: F.least(x, y),
-        ),
-    )
+    a_vec = np.array(a_co, dtype="int64")[:, None]
+    b_vec = np.array(b_co, dtype="int64")[:, None]
+    sentinel = np.full(num_hashes, _MAXLONG, dtype="int64")
+
+    def sign(text: str) -> np.ndarray:
+        h = _shingle_hashes(text, shingle_k)[None, :]
+        return ((a_vec * h + b_vec) % _PRIME_GT_32).min(axis=1)
+
+    @F.pandas_udf("array<bigint>")
+    def minhash(texts: pd.Series) -> pd.Series:
+        return pd.Series([sentinel if t is None else sign(t) for t in texts])
+
+    return minhash
 
 
 def minhash_signatures_df(
@@ -158,47 +187,19 @@ def minhash_signatures_df(
     num_hashes: int = 128,
     shingle_k: int = 5,
 ) -> DataFrame:
-    """Hybrid MinHash: shingling + base hashing stay JVM-side (string
-    work belongs in codegen — one xxhash64 per shingle), then the
-    (a*h+b) % p minima come from an Arrow-batched numpy UDF: one
-    (num_hashes x n_shingles) broadcasted multiply-min per document.
-    Dense integer math is where numpy beats both an expression fold
-    (per-shingle array allocations) and a 120-aggregate groupBy
-    (codegen planning alone cost seconds). Per-partition work, no
+    """(_id, _sig array<long>) per row, signed by ``_minhash_udf``
+    (NULL text → the sentinel signature). Per-partition work, no
     shuffle (fan_out only rebalances when the scan under-partitions
-    — a one-file table must not serialize the minima on one core).
-    Returns (_id, _sig array<long>)."""
-    import numpy as np
+    — a one-file table must not serialize the UDF on one core).
 
+    A signature frame persisted as an index is tied to this signature
+    definition as well as to ``num_hashes``/``shingle_k``: an index
+    built by an earlier definition (before the signature moved into
+    one UDF) collides on nothing and must be rebuilt."""
     from ._util import fan_out
 
-    df = fan_out(df)
-
-    a_co, b_co = _hash_family(num_hashes)
-    a_vec = np.array(a_co, dtype="int64")[:, None]
-    b_vec = np.array(b_co, dtype="int64")[:, None]
-
-    @F.pandas_udf("array<bigint>")
-    def min_udf(hs: pd.Series) -> pd.Series:
-        sentinel = np.full(num_hashes, _MAXLONG, dtype="int64")
-        out = []
-        for h in hs:
-            # NULL/empty text must degrade to a sentinel signature,
-            # never a task failure (one poison row can't fail the job)
-            if h is None or len(h) == 0:
-                out.append(sentinel)
-                continue
-            hv = np.asarray(h, dtype="int64")[None, :]
-            out.append(((a_vec * hv + b_vec) % _PRIME_GT_32).min(axis=1))
-        return pd.Series(out)
-
-    base_hashes = F.transform(
-        char_shingles(F.col(text_col), shingle_k),
-        lambda s: F.xxhash64(s).bitwiseAND(F.lit(4294967295).cast("long")),
-    )
-    return df.select(
-        F.col(id_col).alias("_id"), min_udf(base_hashes).alias("_sig")
-    )
+    sig = _minhash_udf(num_hashes, shingle_k)
+    return fan_out(df).select(F.col(id_col).alias("_id"), sig(F.col(text_col)).alias("_sig"))
 
 
 def minhash_signature(
@@ -207,11 +208,13 @@ def minhash_signature(
     num_hashes: int = 128,
     shingle_k: int = 5,
 ) -> Step:
-    """Attach ``minhash`` (array<long>, length num_hashes)."""
+    """Attach ``minhash`` (array<long>, length num_hashes), the same
+    signature ``minhash_signatures_df`` computes. A dead row is never
+    signed: the UDF sees NULL there and the row keeps its values."""
+    sig = _minhash_udf(num_hashes, shingle_k)
 
     def fn(df: DataFrame, path: tuple[str, ...]) -> DataFrame:
-        sig = _minhash_expr(char_shingles(F.col(text_col), shingle_k), num_hashes)
-        return _guarded(df, {"minhash": sig})
+        return _guarded(df, {"minhash": sig(F.when(is_ok(), F.col(text_col)))})
 
     return Step(name, fn, node_type="minhash", metadata={"num_hashes": num_hashes})
 
@@ -573,7 +576,6 @@ def near_dup_pairs(
     num_hashes: int = 120,
     bands: int = 24,
     shingle_k: int = 5,
-    estimate_filter: bool = True,
 ) -> DataFrame:
     """MinHash-LSH near-duplicate pairs, Jaccard-verified.
 
@@ -595,16 +597,13 @@ def near_dup_pairs(
     margin → exact shingle Jaccard for the survivors (two joins
     against a cached shingle projection — see ngram_jaccard).
     Composing runs no Spark job: the caches below are filled by the
-    caller's first action. Output is IDENTICAL with
-    ``estimate_filter`` off (the margin keeps every true pair; the
-    verify is the final word); the flag exists because
-    the estimate moves 2 × num_hashes longs per candidate, which is
-    A/B-measurable: at 10× scale the S-curve admits ~1M
-    mid-similarity candidates, the estimate prunes them ~4× for
-    660 MB of signature freight, and skipping it pushes 2.7 GB of
-    shingle arrays into the verify (124 s vs 55 s wall). Turn it OFF
-    only when banding is already selective at your threshold
-    (candidates ≈ true pairs).
+    caller's first action. The margin keeps every true pair (the
+    verify is the final word), and the estimate pays for itself: at
+    10× scale the S-curve admits ~1M mid-similarity candidates, the
+    estimate prunes them ~4× for 660 MB of signature freight, where
+    skipping it pushed 2.7 GB of shingle arrays into the verify
+    (124 s vs 55 s wall). A doc with NULL text has no shingles and
+    pairs with nothing.
 
     ROUTING HEURISTIC (measured at the 100× stress, identical pair
     sets): MinHash pays for itself only when the signature (2 ×
@@ -625,25 +624,20 @@ def near_dup_pairs(
     (banding S-curve vs df-capped candidate generation), and a plan
     that silently changes shape with corpus statistics is exactly
     what the repo's plan-canary discipline exists to prevent."""
-    sigs = None
-    if estimate_filter:
-        # persisted: the banding pass and both estimate join sides
-        # read it. Not pinned: the caller's action fills the cache
-        sigs = track(
-            minhash_signatures_df(
-                df, id_col=id_col, text_col=text_col,
-                num_hashes=num_hashes, shingle_k=shingle_k,
-            ).persist()
-        )
+    # persisted: the banding pass and both estimate join sides read
+    # it. Not pinned: the caller's action fills the cache
+    sigs = track(
+        minhash_signatures_df(
+            df, id_col=id_col, text_col=text_col,
+            num_hashes=num_hashes, shingle_k=shingle_k,
+        ).persist()
+    )
     cand = lsh_candidate_pairs(
         df, id_col=id_col, text_col=text_col,
         num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
         sigs=sigs,
     )
-    if estimate_filter:
-        cand = _minhash_estimate_filter(
-            cand, sigs, sigs, "id_a", "id_b", threshold, num_hashes
-        )
+    cand = _minhash_estimate_filter(cand, sigs, sigs, "id_a", "id_b", threshold, num_hashes)
     return ngram_jaccard(df, cand, id_col=id_col, text_col=text_col, shingle_k=shingle_k).where(
         F.col("jaccard") >= threshold
     )
@@ -660,7 +654,9 @@ def banded_signatures(
     signatures are. The SIGNATURE frame is the thing to persist for
     incremental dedup (one compact row per doc); banding parameters
     are part of a stored index's identity — a new batch must band
-    with the same family to collide correctly."""
+    with the same family to collide correctly. A sentinel signature
+    (NULL text) gets no band rows: every NULL doc shares it, so
+    banding it would pair them all with each other."""
     if num_hashes % bands != 0:
         # silently ignoring the trailing num_hashes % bands slots
         # would compute, shuffle, and discard signatures while
@@ -671,7 +667,7 @@ def banded_signatures(
             "banding S-curve is defined by rows-per-band = num_hashes/bands"
         )
     rows = num_hashes // bands
-    return sigs.select(
+    return sigs.where(F.col("_sig")[0] != F.lit(_MAXLONG)).select(
         "_id",
         F.posexplode(
             F.transform(
@@ -715,12 +711,15 @@ def cross_near_dup_pairs(
 
     Pass ``ref_sigs`` — a materialized ``minhash_signatures_df`` frame
     built with the SAME num_hashes/shingle_k — to skip re-signing the
-    reference corpus on every incremental batch. The frame is
-    validated (signature width must equal ``num_hashes``: mismatched
-    families collide on NOTHING and would silently return empty) and
-    is used as the caller owns it: this function never persists or
-    cache-tracks a caller-supplied index, so ``release_caches()``
-    between batches cannot unpersist it.
+    reference corpus on every incremental batch. The frame's signature
+    width is validated (it must equal ``num_hashes``: mismatched
+    families collide on NOTHING and would silently return empty), but
+    its base hash cannot be: an index saved before the signature moved
+    into one UDF (``_minhash_udf``) also collides on nothing and must
+    be rebuilt. The frame is used as the caller owns it: this function
+    never persists or cache-tracks a caller-supplied index, so
+    ``release_caches()`` between batches cannot unpersist it.
+    A doc with NULL text on either side pairs with nothing.
 
     Returns (new_id, ref_id, jaccard) at/above ``threshold``.
     """

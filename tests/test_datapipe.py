@@ -214,6 +214,39 @@ def test_minhash_signature_shape(documents):
     assert len(row["minhash"]) == 16
 
 
+def test_minhash_step_equals_signature_frame(documents):
+    # one signature definition: the Step's column and the frame that
+    # near_dup_pairs bands agree doc for doc
+    from pipz_spark.datapipe.dedup import minhash_signatures_df
+
+    step = split_ok(minhash_signature(num_hashes=16)(documents))
+    by_step = {r["doc_id"]: r["minhash"] for r in step.select("doc_id", "minhash").collect()}
+    by_frame = {r["_id"]: r["_sig"] for r in minhash_signatures_df(documents, num_hashes=16).collect()}
+    assert by_step == by_frame
+    assert len(by_frame) == documents.count()
+
+
+def test_null_text_pairs_with_nothing(spark):
+    # a NULL text has no shingles (the oracle's list_distinct drops the
+    # NULL one): it is never a candidate nor a pair, on the self-join
+    # and the cross path alike. "" is one empty shingle and pairs
+    from pipz_spark.datapipe import cross_near_dup_pairs, dedup_clusters, release_caches
+
+    df = spark.createDataFrame(
+        [(1, None), (2, None), (3, ""), (4, ""), (5, None), (6, "abc"), (7, "abc")],
+        "doc_id long, text string",
+    )
+    try:
+        assert sorted(map(tuple, lsh_candidate_pairs(df).collect())) == [(3, 4), (6, 7)]
+        assert sorted(map(tuple, near_dup_pairs(df).collect())) == [(3, 4, 1.0), (6, 7, 1.0)]
+        cross = cross_near_dup_pairs(df.where(F.col("doc_id").isin(1, 2, 6)), df)
+        assert sorted(map(tuple, cross.collect())) == [(6, 6, 1.0), (6, 7, 1.0)]
+        keepers = {r["doc_id"] for r in dedup_clusters(df).where("is_keeper").collect()}
+        assert keepers == {1, 2, 3, 5, 6}
+    finally:
+        release_caches()
+
+
 def test_column_steps_keep_pre_step_values_on_dead_rows(spark):
     # a dead-lettered row keeps its upstream error AND its pre-step
     # value of an output column the step would otherwise overwrite
@@ -866,7 +899,6 @@ def test_near_dup_operators_compose_without_running_a_job(spark, documents):
     images = documents.select("doc_id", blob)
     builds = {
         "near_dup_pairs": lambda: near_dup_pairs(documents),
-        "near_dup_pairs/no-estimate": lambda: near_dup_pairs(documents, estimate_filter=False),
         "lsh_candidate_pairs": lambda: lsh_candidate_pairs(documents),
         "jaccard_near_dup_pairs": lambda: jaccard_near_dup_pairs(documents),
         "simhash_near_dup_pairs": lambda: simhash_near_dup_pairs(documents),

@@ -97,6 +97,30 @@ def test_range_join_equals_naive_join(spark_prop, pts, ivs, bin_s, inclusive):
 VOCAB = ["alpha", "beta", "gamma", "delta", "eps", "zeta", "eta", "theta"]
 
 
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(st.text(max_size=24), min_size=1, max_size=8),
+    k=st.integers(min_value=1, max_value=6),
+)
+@example(texts=["", "abc", "abcde", "a\U0001F600b\U0001D518c\U0001F600d", "aaaaaaaa"], k=5)
+def test_signature_windows_are_char_shingles(spark_prop, texts, k):
+    """The MinHash UDF's windows are ``char_shingles``' shingles for
+    any Unicode text: code points (non-BMP included), a text shorter
+    than k as one whole-text shingle, "" as one empty shingle. Each
+    shingle hashes as a one-window text, so equal hash sets with
+    equal distinct counts mean equal window sets."""
+    from pipz_spark.datapipe.dedup import _shingle_hashes, char_shingles
+
+    df = spark_prop.createDataFrame(list(enumerate(texts)), "i long, text string")
+    rows = df.select("i", char_shingles(F.col("text"), k).alias("sh")).orderBy("i").collect()
+    for t, row in zip(texts, rows):
+        shingles = set(row["sh"])
+        assert shingles == {t[i : i + k] for i in range(max(len(t) - k + 1, 1))}
+        got = _shingle_hashes(t, k)
+        assert len(got) == len(shingles)
+        assert set(got.tolist()) == {int(_shingle_hashes(s, k)[0]) for s in shingles}
+
+
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     docs=st.lists(
