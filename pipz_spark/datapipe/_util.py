@@ -30,6 +30,33 @@ def _plan_sets_partitioning(df: DataFrame) -> bool:
     return bool(_PARTITIONING_NODES.search(plan))
 
 
+def local_frame(spark, data, schema) -> DataFrame:
+    """A driver-resident frame built through Arrow as a
+    ``LocalRelation``: ``data`` is a pandas frame or a list of row
+    tuples, ``schema`` a ``StructType`` or DDL string whose types and
+    nullability the frame keeps exactly. A list of rows would become a
+    PythonRDD scan (``LogicalRDD``) that starts Python workers on
+    every evaluation; so would an EMPTY pandas frame, which
+    ``createDataFrame`` does not send through Arrow. An Arrow table of
+    any length, empty included, lands as a local relation."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType
+
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(schema)
+    if isinstance(data, list):
+        cols = list(zip(*data)) if data else [()] * len(schema.fields)
+        table = pa.Table.from_arrays(
+            [pa.array(c, type=f.type) for c, f in zip(cols, arrow_schema)],
+            schema=arrow_schema,
+        )
+    else:
+        table = pa.Table.from_pandas(data, schema=arrow_schema, preserve_index=False)
+    return spark.createDataFrame(table, schema)
+
+
 def fan_out(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     """Rebalance an under-partitioned input ahead of a CPU-bound
     stage. A small table arrives from the scan as ONE input split

@@ -4,17 +4,20 @@
 generate the all-pairs cross product. The MinHash path is banded LSH:
 shingle → 120 minhashes → 24 bands of 5 → explode to (band, hash)
 buckets → in-bucket pair expansion (one aggregation, no self-join)
-→ verify candidates with exact n-gram Jaccard. Hot buckets (boilerplate
-text) are split into fixed-size chunk cells so one degenerate bucket
-cannot quadratically blow up a partition — the standard skew guard
-for LSH joins.
+→ verify candidates with exact shingle Jaccard. Hot buckets
+(boilerplate text) are split into fixed-size chunk cells so one
+degenerate bucket cannot quadratically blow up a partition — the
+standard skew guard for LSH joins.
 
 The signature is one Arrow-batched UDF straight from the text: code
 points → k-wide window hashes → distinct → dense (a*h + b) mod p
 minima in numpy. Spark evaluates array lambdas (``transform``,
 ``aggregate``) interpreted, element by element, so shingling there
-cost more than the minima it fed. The exact verify keeps
-``char_shingles``, the definition the DuckDB oracles share.
+cost more than the minima it fed. The exact verify is a second
+Arrow UDF over each candidate's two texts, run where the candidate
+lands (filter, then verify in place): Python code-point shingle
+sets, the same windows as ``char_shingles``, the definition the
+DuckDB oracles share.
 """
 
 from __future__ import annotations
@@ -180,6 +183,32 @@ def _minhash_udf(num_hashes: int, shingle_k: int):
     return minhash
 
 
+# the signature definition a ``_sig`` column was built by, pinned in
+# its schema metadata (survives parquet round-trips): a stored index
+# signed by another definition or shingle width collides on nothing,
+# so ``cross_near_dup_pairs`` refuses it instead of answering []
+_SIG_DEFINITION = "codepoint-window-xor-mul/v1"
+
+
+def _sig_meta(shingle_k: int) -> dict:
+    return {"minhash_definition": _SIG_DEFINITION, "shingle_k": shingle_k}
+
+
+def _signed_docs(
+    df: DataFrame, id_col: str, text_col: str, num_hashes: int, shingle_k: int
+) -> DataFrame:
+    """(_id, _t text, _sig) per row: the one doc frame the near-dup
+    paths persist, band, and join to both sides of a candidate."""
+    from ._util import fan_out
+
+    sig = _minhash_udf(num_hashes, shingle_k)
+    return fan_out(df).select(
+        F.col(id_col).alias("_id"),
+        F.col(text_col).alias("_t"),
+        sig(F.col(text_col)).alias("_sig", metadata=_sig_meta(shingle_k)),
+    )
+
+
 def minhash_signatures_df(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -193,13 +222,14 @@ def minhash_signatures_df(
     — a one-file table must not serialize the UDF on one core).
 
     A signature frame persisted as an index is tied to this signature
-    definition as well as to ``num_hashes``/``shingle_k``: an index
-    built by an earlier definition (before the signature moved into
-    one UDF) collides on nothing and must be rebuilt."""
-    from ._util import fan_out
-
-    sig = _minhash_udf(num_hashes, shingle_k)
-    return fan_out(df).select(F.col(id_col).alias("_id"), sig(F.col(text_col)).alias("_sig"))
+    definition as well as to ``num_hashes``/``shingle_k``: ``_sig``
+    carries the definition and ``shingle_k`` in its column metadata,
+    and ``cross_near_dup_pairs(ref_sigs=...)`` rejects an index whose
+    tag is missing or differs. An index written before the tag
+    existed must be rebuilt: one signed by an earlier definition
+    collides on nothing, and one signed by this same definition
+    carries no tag to tell it apart."""
+    return _signed_docs(df, id_col, text_col, num_hashes, shingle_k).drop("_t")
 
 
 def minhash_signature(
@@ -365,34 +395,89 @@ def _cross_bucket_pairs(
     return small_pairs.unionByName(big_pairs).dropDuplicates()
 
 
-def _minhash_estimate_filter(
-    cand: DataFrame,
-    sigs_a: DataFrame,
-    sigs_b: DataFrame,
-    key_a: str,
-    key_b: str,
-    threshold: float,
-    num_hashes: int,
-) -> DataFrame:
-    """Prune candidate pairs by the MinHash Jaccard ESTIMATE (fraction
-    of agreeing signature slots) at ``threshold`` minus a 3σ margin —
-    the shared middle stage of both the self-join (``near_dup_pairs``)
-    and cross-corpus (``cross_near_dup_pairs``) paths; one definition
-    so the margin/estimator can never drift between them. The margin
-    keeps every true pair (the exact verify downstream is the final
-    word); the filter exists because the estimate moves 2·num_hashes
-    longs per candidate while the verify moves whole shingle arrays."""
+def _estimate_ok(threshold: float, num_hashes: int) -> Column:
+    """The MinHash Jaccard ESTIMATE gate on a joined candidate row
+    (``_sa``/``_sb``: its two signatures): the fraction of agreeing
+    slots at ``threshold`` minus a 3σ margin — one definition for the
+    self-join (``near_dup_pairs``) and cross-corpus
+    (``cross_near_dup_pairs``) paths, so the margin/estimator cannot
+    drift between them. The margin keeps every true pair (the exact
+    verify downstream is the final word); the gate exists because a
+    slot compare is far cheaper than the verify's shingle sets."""
     margin = 3.0 / (num_hashes ** 0.5)
-    return (
-        cand.join(sigs_a.select(F.col("_id").alias(key_a), F.col("_sig").alias("_sa")), key_a)
-        .join(sigs_b.select(F.col("_id").alias(key_b), F.col("_sig").alias("_sb")), key_b)
-        .withColumn(
-            "_est",
-            F.size(F.filter(F.zip_with("_sa", "_sb", lambda a, b: a == b), lambda x: x))
-            / F.lit(num_hashes),
-        )
-        .where(F.col("_est") >= threshold - margin)
-        .select(key_a, key_b)
+    est = F.size(
+        F.filter(F.zip_with("_sa", "_sb", lambda a, b: a == b), lambda x: x)
+    ) / F.lit(num_hashes)
+    return est >= threshold - margin
+
+
+def _text_jaccard_udf(shingle_k: int):
+    """Exact char-shingle Jaccard of a candidate's two TEXTS, one
+    Arrow-batched UDF: Python code-point ``shingle_k``-gram sets (the
+    windows ``char_shingles`` builds: a text shorter than k is one
+    whole-text shingle, ``""`` one empty shingle), |A ∩ B| / |A ∪ B|
+    as a double; NULL on either side → NULL. Each set is built once
+    per distinct TEXT within a batch (not per id: a repeated id may
+    carry two texts), so a hot bucket's thousands of pairs over a few
+    texts shingle each text once.
+
+    Marked nondeterministic so the plan evaluates it ONCE: a
+    deterministic UDF lets the optimizer push the caller's
+    ``jaccard >= threshold`` filter under its projection, and the plan
+    then carries two ``ArrowEvalPython`` nodes (every pair scored
+    twice)."""
+    k = shingle_k
+
+    def grams(t: str) -> frozenset:
+        return frozenset(t[i:i + k] for i in range(max(len(t) - k + 1, 1)))
+
+    @F.pandas_udf("double")
+    def jaccard(a: pd.Series, b: pd.Series) -> pd.Series:
+        memo: dict = {}
+
+        def shingles(t: str) -> frozenset:
+            s = memo.get(t)
+            if s is None:
+                s = memo[t] = grams(t)
+            return s
+
+        out = []
+        for x, y in zip(a, b):
+            if x is None or y is None:
+                out.append(None)
+                continue
+            sx, sy = shingles(x), shingles(y)
+            inter = len(sx & sy)
+            out.append(inter / (len(sx) + len(sy) - inter))
+        return pd.Series(out, dtype="float64")
+
+    return jaccard.asNondeterministic()
+
+
+def _side(frame: DataFrame, key: str, s: str) -> DataFrame:
+    """One side of a candidate join over a signed doc frame:
+    ``_id`` → ``key``, ``_sig`` → ``_s{s}`` and, when the frame
+    carries it, the text ``_t`` → ``_t{s}``."""
+    names = {"_id": key, "_sig": f"_s{s}", "_t": f"_t{s}"}
+    return frame.select(*[F.col(c).alias(names[c]) for c in frame.columns if c in names])
+
+
+def _verified(
+    cand: DataFrame, key_a: str, key_b: str, shingle_k: int, threshold: float
+) -> DataFrame:
+    """(key_a, key_b, jaccard) at/above ``threshold`` for candidate
+    rows carrying their two texts as ``_ta``/``_tb``: the text verify
+    scores each row where it landed, with no second index built."""
+    # quantize4, NOT round(·, 4): round's double tie handling
+    # diverges between Spark and DuckDB (see text.quantize4's
+    # docstring — a real sf0.1 divergence); the threshold filter
+    # compares the quantized value, so the quantizer must be the
+    # engine-portable floor form (r6 advisor finding)
+    from .text import quantize4
+
+    jac = quantize4(_text_jaccard_udf(shingle_k)(F.col("_ta"), F.col("_tb")))
+    return cand.select(key_a, key_b, jac.alias("jaccard")).where(
+        F.col("jaccard") >= threshold
     )
 
 
@@ -429,12 +514,15 @@ def ngram_jaccard(
     shingle_k: int = 5,
     gram_fn: "Callable[[Column], Column] | None" = None,
 ) -> DataFrame:
-    """Exact gram-set Jaccard for candidate pairs (the verify pass
-    after LSH). ``gram_fn`` selects the set construction — default
-    char shingles of ``shingle_k`` (the MinHash path's unit); pass
-    e.g. ``lambda t: word_ngrams(t, 5)`` to verify on word n-grams
-    instead. The gram-set projection is computed once for only
-    the documents that appear in a candidate pair (semi-join prune),
+    """Exact gram-set Jaccard for candidate pairs, on gram sets built
+    in the JVM — ``jaccard_near_dup_pairs``' word-gram verify (the
+    MinHash paths verify on the pair's two texts instead, see
+    ``_text_jaccard_udf``). ``gram_fn`` selects the set construction
+    — default char shingles of ``shingle_k``; pass e.g.
+    ``lambda t: word_ngrams(t, 5)`` for word n-grams, as
+    ``jaccard_near_dup_pairs`` does. The gram-set projection is
+    computed once for only the documents that appear in a candidate
+    pair (semi-join prune),
     persisted, and joined to each side of the skinny pair list — the
     intersect streams through the join output with no array-valued
     aggregation anywhere.
@@ -590,20 +678,24 @@ def near_dup_pairs(
     pruning the flood of low-similarity candidates a 32x4 scheme
     (threshold 0.42) would send to the exact-verify stage.
 
-    Three stages, each strictly cheaper than the next is selective:
-    banded-LSH candidates (equi-join) → minhash-ESTIMATE filter
-    (fraction of agreeing signature slots — unbiased Jaccard
-    estimator, sd ~ 1/sqrt(num_hashes)) at threshold minus a 3-sigma
-    margin → exact shingle Jaccard for the survivors (two joins
-    against a cached shingle projection — see ngram_jaccard).
-    Composing runs no Spark job: the caches below are filled by the
-    caller's first action. The margin keeps every true pair (the
-    verify is the final word), and the estimate pays for itself: at
-    10× scale the S-curve admits ~1M mid-similarity candidates, the
-    estimate prunes them ~4× for 660 MB of signature freight, where
-    skipping it pushed 2.7 GB of shingle arrays into the verify
-    (124 s vs 55 s wall). A doc with NULL text has no shingles and
-    pairs with nothing.
+    One persisted doc frame, (_id, text, _sig), feeds the whole plan:
+    banded-LSH candidates (the chunk-grid bucket expansion, no join)
+    → each candidate joined to BOTH sides of that same frame (two
+    joins) → minhash-ESTIMATE filter on the joined row (fraction of
+    agreeing signature slots — unbiased Jaccard estimator, sd ~
+    1/sqrt(num_hashes)) at threshold minus a 3-sigma margin → exact
+    shingle Jaccard of the survivor's two texts, one Arrow UDF
+    evaluated once in the plan (``_text_jaccard_udf``). No shingle
+    array is built in the JVM or shipped, and no second per-doc
+    projection is persisted or re-joined. The price: every candidate,
+    not only an estimate survivor, carries its two texts out of the
+    joins (at the 10× stress the whole plan still shuffled 53 MB
+    where the shingle-array verify shuffled 67 MB). Composing runs no Spark job:
+    the cache is filled by the caller's first action. The margin keeps
+    every true pair (the verify is the final word), and the estimate
+    is a slot compare per candidate while the verify builds shingle
+    sets. A doc with NULL text has no shingles and pairs with
+    nothing.
 
     ROUTING HEURISTIC (measured at the 100× stress, identical pair
     sets): MinHash pays for itself only when the signature (2 ×
@@ -624,22 +716,21 @@ def near_dup_pairs(
     (banding S-curve vs df-capped candidate generation), and a plan
     that silently changes shape with corpus statistics is exactly
     what the repo's plan-canary discipline exists to prevent."""
-    # persisted: the banding pass and both estimate join sides read
+    # persisted: the banding pass and both candidate join sides read
     # it. Not pinned: the caller's action fills the cache
-    sigs = track(
-        minhash_signatures_df(
-            df, id_col=id_col, text_col=text_col,
-            num_hashes=num_hashes, shingle_k=shingle_k,
-        ).persist()
+    docs = track(
+        _signed_docs(df, id_col, text_col, num_hashes, shingle_k).persist()
     )
     cand = lsh_candidate_pairs(
-        df, id_col=id_col, text_col=text_col,
-        num_hashes=num_hashes, bands=bands, shingle_k=shingle_k,
-        sigs=sigs,
+        df, num_hashes=num_hashes, bands=bands, shingle_k=shingle_k, sigs=docs
     )
-    cand = _minhash_estimate_filter(cand, sigs, sigs, "id_a", "id_b", threshold, num_hashes)
-    return ngram_jaccard(df, cand, id_col=id_col, text_col=text_col, shingle_k=shingle_k).where(
-        F.col("jaccard") >= threshold
+
+    joined = cand.join(_side(docs, "id_a", "a"), "id_a").join(
+        _side(docs, "id_b", "b"), "id_b"
+    )
+    return _verified(
+        joined.where(_estimate_ok(threshold, num_hashes)), "id_a", "id_b",
+        shingle_k, threshold,
     )
 
 
@@ -701,57 +792,52 @@ def cross_near_dup_pairs(
     candidates — strictly new×ref via ``_cross_bucket_pairs``, whose
     grid salting bounds every task at max_bucket² pairs even for a
     viral template bucket (output-side skew is invisible to AQE) —
-    then the shared minhash-ESTIMATE filter at threshold minus 3σ
-    (measured 2.4M → ~140k candidates on the 10× stress corpus),
-    then exact shingle Jaccard with each side
-    semi-join-pruned to the docs that actually appear in a candidate
-    (the headline case is a small batch vs a huge corpus — shingling
-    the whole reference every batch would dwarf the query itself).
-    The two corpora may share id values, so sides never union.
+    joined to each side's (_id, text, _sig) frame, then the shared
+    minhash-ESTIMATE filter at threshold minus 3σ (measured 2.4M →
+    ~140k candidates on the 10× stress corpus) on the joined row,
+    then the same text verify (``_text_jaccard_udf``) on the
+    survivor's two texts — only docs that land in a candidate are
+    ever shingled (the headline case is a small batch vs a huge
+    corpus). The two corpora may share id values, so sides never
+    union.
 
     Pass ``ref_sigs`` — a materialized ``minhash_signatures_df`` frame
     built with the SAME num_hashes/shingle_k — to skip re-signing the
-    reference corpus on every incremental batch. The frame's signature
-    width is validated (it must equal ``num_hashes``: mismatched
-    families collide on NOTHING and would silently return empty), but
-    its base hash cannot be: an index saved before the signature moved
-    into one UDF (``_minhash_udf``) also collides on nothing and must
-    be rebuilt. The frame is used as the caller owns it: this function
-    never persists or cache-tracks a caller-supplied index, so
-    ``release_caches()`` between batches cannot unpersist it.
-    A doc with NULL text on either side pairs with nothing.
+    reference corpus on every incremental batch; the reference TEXT
+    of each surviving candidate is then joined from ``ref``, pruned
+    first to the survivors' ref ids (one more job pins the survivors
+    so that prune can broadcast). The index is validated before use:
+    its signature width must equal ``num_hashes``, and its ``_sig``
+    metadata must carry this signature definition and ``shingle_k``.
+    A mismatched index collides on NOTHING and would silently return
+    empty, so it raises ``ValueError``; so does an untagged one. Any
+    index written before the tag existed is untagged, including one
+    signed by this same definition, and must be rebuilt with
+    ``minhash_signatures_df``. The frame is used as the
+    caller owns it: this function never persists or cache-tracks a
+    caller-supplied index, so ``release_caches()`` between batches
+    cannot unpersist it. A doc with NULL text on either side pairs
+    with nothing.
 
     Returns (new_id, ref_id, jaccard) at/above ``threshold``.
     """
-    from ._util import fan_out
-
     def sign(df: DataFrame) -> DataFrame:
-        return minhash_signatures_df(
-            df, id_col=id_col, text_col=text_col,
-            num_hashes=num_hashes, shingle_k=shingle_k,
-        )
+        return _signed_docs(df, id_col, text_col, num_hashes, shingle_k)
 
-    # signatures feed the banding AND the estimate filter — persist
-    # the frames THIS call creates (a caller-supplied index is the
+    # signatures feed the banding AND the estimate join — persist the
+    # frames THIS call creates (a caller-supplied index is the
     # caller's to manage). No eager pin: _cross_bucket_pairs' sizing
     # action references each signature frame exactly ONCE (through
     # its banding explode), so both caches fill race-free inside the
     # action the plan needs anyway; the estimate joins read the
-    # filled caches. The old per-frame count()s were two extra
-    # sequential driver-blocking jobs per call. Caveat: with a hot
-    # bucket, that action (big_keys.limit(1).count()) can stop early
-    # and leave the caches partly filled; the estimate joins then
-    # recompute the rest (slower, same result).
+    # filled caches. Caveat: with a hot bucket, that action
+    # (big_keys.limit(1).count()) can stop early and leave the caches
+    # partly filled; the estimate joins then recompute the rest
+    # (slower, same result).
     sn = track(sign(new).persist())
     if ref_sigs is not None:
-        first = ref_sigs.select(F.size("_sig").alias("_w")).first()
-        if first is not None and first["_w"] != num_hashes:
-            raise ValueError(
-                f"ref_sigs signature width {first['_w']} != num_hashes="
-                f"{num_hashes}: the index was built with a different "
-                "MinHash family and would collide on nothing"
-            )
-        sr = ref_sigs
+        _check_sig_index(ref_sigs, num_hashes, shingle_k)
+        sr = ref_sigs.select("_id", "_sig")
     else:
         sr = track(sign(ref).persist())
 
@@ -763,41 +849,53 @@ def cross_near_dup_pairs(
         ["band", "band_hash"],
         max_bucket,
     )
-    cand = track(
-        _minhash_estimate_filter(
-            cand, sn, sr, "new_id", "ref_id", threshold, num_hashes
-        ).persist()
+    cand = (
+        cand.join(_side(sn, "new_id", "a"), "new_id")
+        .join(_side(sr, "ref_id", "b"), "ref_id")
+        .where(_estimate_ok(threshold, num_hashes))
     )
-    # pin before the semi-join prune and verify join race it: without
-    # it this call measured MORE jobs, not fewer (ROADMAP D4)
-    cand.count()
+    if ref_sigs is not None:
+        # a caller's index carries no text: join the reference text of
+        # the survivors' ref ids only. Pinned so the cached survivors
+        # carry real statistics: their distinct ids then broadcast into
+        # a semi-join on the ref scan, and only the pruned reference
+        # rows are shuffled into the text join, never the whole corpus
+        cand = track(cand.persist())
+        cand.count()
+        ref_t = ref.select(
+            F.col(id_col).alias("ref_id"), F.col(text_col).alias("_tb")
+        ).join(cand.select("ref_id").distinct(), "ref_id", "left_semi")
+        cand = cand.join(ref_t, "ref_id")
+    # without an index no persist and no pin: the verify reads the
+    # candidates once, in the same plan, and a count() pin there
+    # measured 3 jobs more (a count() of this call on sf0.01's
+    # odd/even split: 18 vs 15)
+    return _verified(cand, "new_id", "ref_id", shingle_k, threshold)
 
-    def sh_proj(df: DataFrame, out_id: str) -> DataFrame:
-        relevant = fan_out(df).join(
-            cand.select(F.col(out_id).alias("_cid")).distinct(),
-            F.col(id_col) == F.col("_cid"),
-            "left_semi",
+
+def _check_sig_index(ref_sigs: DataFrame, num_hashes: int, shingle_k: int) -> None:
+    """Reject a stored signature index that would collide on nothing:
+    a signature width other than ``num_hashes``, or a ``_sig`` column
+    whose metadata lacks this signature definition's tag or names
+    another definition or ``shingle_k``."""
+    # the tag first: it is schema metadata, read without a job
+    meta = ref_sigs.schema["_sig"].metadata or {}
+    got = {k: meta.get(k) for k in _sig_meta(shingle_k)}
+    if got != _sig_meta(shingle_k):
+        raise ValueError(
+            f"ref_sigs signature tag {got} != {_sig_meta(shingle_k)}: the "
+            "index is untagged (written before the tag existed, whatever "
+            "definition signed it, or its metadata was dropped) or was "
+            "signed by another definition, and an unverified index may "
+            "collide on nothing; rebuild it with minhash_signatures_df"
         )
-        return relevant.select(
-            F.col(id_col).alias(out_id),
-            char_shingles(F.col(text_col), shingle_k).alias(f"_sh_{out_id}"),
+    first = ref_sigs.select(F.size("_sig").alias("_w")).first()
+    if first is not None and first["_w"] != num_hashes:
+        raise ValueError(
+            f"ref_sigs signature width {first['_w']} != num_hashes="
+            f"{num_hashes}: the index was built with a different "
+            "MinHash family and would collide on nothing"
         )
-
-    joined = cand.join(sh_proj(new, "new_id"), "new_id").join(
-        sh_proj(ref, "ref_id"), "ref_id"
-    )
-    # same engine-portable quantizer as ngram_jaccard (r6 advisor:
-    # the threshold filter on a round(·,4) value carries round's
-    # cross-engine tie divergence)
-    from .text import quantize4
-
-    jac = quantize4(
-        F.size(F.array_intersect("_sh_new_id", "_sh_ref_id"))
-        / F.size(F.array_union("_sh_new_id", "_sh_ref_id"))
-    )
-    return joined.select("new_id", "ref_id", jac.alias("jaccard")).where(
-        F.col("jaccard") >= threshold
-    )
 
 
 def _simhash_expr(text: Column, bits: int = 64) -> Column:

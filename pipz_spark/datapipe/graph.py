@@ -74,6 +74,7 @@ import itertools
 import threading
 
 from py4j.protocol import Py4JJavaError
+from pyspark import StorageLevel
 from pyspark.errors import AnalysisException
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -1229,11 +1230,13 @@ def _driver_union_find(spark, us, vs, id_type) -> DataFrame:
         r = find(node)
         if r not in comp_min or node < comp_min[r]:
             comp_min[r] = node
+    from ._util import local_frame
+
     out = [(node, comp_min[find(node)]) for node in parent]
     schema = StructType(
         [StructField("node", id_type), StructField("component", id_type)]
     )
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
 def connected_components(
@@ -1318,7 +1321,9 @@ def connected_components(
     # symmetrized frame, and every propagation round all read it, so
     # an over-cap graph pays its (possibly expensive) pair plan
     # exactly once — CollectLimit feeding the probe materializes the
-    # persisted rows the distributed path then reuses.
+    # persisted rows the distributed path then reuses. A pair frame
+    # the caller already cached is read as is: its plan is a cache
+    # scan, and a second cache over it would cost one more job.
     # NULL-endpoint pairs are DROPPED by the family-wide
     # _directed_front (r15 review fix, now stated once there): before
     # the uniform WHERE the paths disagreed on them — label
@@ -1329,9 +1334,9 @@ def connected_components(
     # partner are absent from the map (no information, not a
     # singleton claim), and the driver fast path needs no NaN guard:
     # pandas can't widen the probe's int columns to float64.
-    e = track(
-        _directed_front(pairs, id_a, id_b, out=("u", "v")).persist()
-    )
+    e = _directed_front(pairs, id_a, id_b, out=("u", "v"))
+    if pairs.storageLevel == StorageLevel.NONE:
+        e = track(e.persist())
     if algorithm == "auto" and driver_cap > 0:
         # one bounded action sizes the graph AND fetches it when small
         # (cap+1 rows back = too big, fall through); Arrow-decoded

@@ -61,7 +61,9 @@ def fit_bigram_lm(
     # scan (the LM is reused via broadcast in score_bigram_lm)
     spark = df.sparkSession
     bi_local = grams.groupBy("bigram").agg(F.count(F.lit(1)).alias("n_bi")).toPandas()
-    bi = spark.createDataFrame(bi_local, schema="bigram string, n_bi long")
+    from ._util import local_frame
+
+    bi = local_frame(spark, bi_local, "bigram string, n_bi long")
     uni = (
         bi.groupBy(F.substring("bigram", 1, 1).alias("prefix"))
         .agg(F.sum("n_bi").alias("n_uni"))

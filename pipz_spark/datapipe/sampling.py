@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 from ..core.errors import ERROR_COL, ensure_error_column, is_ok, null_error
 from ..core.step import Step
 from ..operators.processors import _guarded
+from ._util import local_frame
 
 _BUCKETS = 10_000
 
@@ -332,9 +333,8 @@ def mixture_resample(
         mass = (
             df.where(is_ok()).groupBy(stratum.alias("_s")).agg(mass_expr.alias("_m"))
         )
-        spark = df.sparkSession
-        sh = spark.createDataFrame(
-            list(shares.items()), "_s string, _share double"
+        sh = local_frame(
+            df.sparkSession, list(shares.items()), "_s string, _share double"
         )
         r = mass.join(F.broadcast(sh), "_s")
         tmin = r.agg(F.min(F.col("_m") / F.col("_share")).alias("_t"))
@@ -430,12 +430,11 @@ def doremi_weights(
         raw = {d: w[d] * factors[d] for d in w}  # python ints: no overflow
         total = sum(raw.values())
         w = {d: (raw[d] * scale) // total for d in w}
-    spark = df.sparkSession
-    out = spark.createDataFrame(
+    return local_frame(
+        df.sparkSession,
         [(d, means[d], w[d] / scale) for d, _, _ in doms],
         f"{domain_col} string, mean_loss double, weight double",
     )
-    return out
 
 
 def token_budget_cap(
@@ -512,8 +511,7 @@ def token_budget_cap(
             for r in sorted(totals, key=lambda r: r["_b"]):
                 offs.append((r["_b"], acc))
                 acc += r["_t"] or 0
-            spark = df.sparkSession
-            off_df = spark.createDataFrame(offs, "_b int, _off long")
+            off_df = local_frame(df.sparkSession, offs, "_b int, _off long")
             w = Window.partitionBy("_b").orderBy(F.col("_h"), key_str)
             out = out.join(F.broadcast(off_df), "_b", "left").withColumn(
                 "_cum", F.coalesce(F.col("_off"), F.lit(0)) + F.sum("_tok").over(w)

@@ -84,9 +84,9 @@ def bm25_topk(
     if not qterms:
         raise ValueError("queries contain no terms")
     vocab = sorted({t for _, t in qterms})
-    qdf = spark.createDataFrame(qterms, "query_id int, term string")
+    from ._util import fan_out, local_frame
 
-    from ._util import fan_out
+    qdf = local_frame(spark, qterms, "query_id int, term string")
 
     text = F.col(text_col)
     # empty split cells (leading/trailing \n or \t survive trim, which

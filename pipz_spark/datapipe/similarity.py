@@ -24,6 +24,8 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ._util import local_frame
+
 
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(
@@ -258,8 +260,8 @@ def cosine_topk_lsh(
             # result like the PQ sibling instead of a TypeError inside
             # the dim probe (r7 review finding)
             id_t = _id_type(corpus, id_col)
-            return corpus.sparkSession.createDataFrame(
-                [], f"qid {id_t}, nid {id_t}, cos double, rank int"
+            return local_frame(
+                corpus.sparkSession, [], f"qid {id_t}, nid {id_t}, cos double, rank int"
             )
         dim = int(first["d"])
     all_planes = [_hyperplanes(dim, bits, seed + t) for t in range(tables)]
@@ -494,9 +496,8 @@ def cosine_topk_pq(
         # this, np.linalg.norm(axis=1) on the (0,) query matrix
         # raises AxisError before any Spark job runs (r6 advisor)
         id_t = _id_type(corpus, id_col)
-        spark = corpus.sparkSession
-        return spark.createDataFrame(
-            [], f"qid {id_t}, nid {id_t}, cos double, rank int"
+        return local_frame(
+            corpus.sparkSession, [], f"qid {id_t}, nid {id_t}, cos double, rank int"
         )
     qids = np.array([r["_id"] for r in qrows])
     Q = np.array([r["_v"] for r in qrows], dtype="float64")
@@ -673,8 +674,8 @@ def embedding_near_dup_pairs(
         if first is None or first["d"] is None:
             # empty corpus: no pairs, by construction (r7 review)
             id_t = _id_type(corpus, id_col)
-            return corpus.sparkSession.createDataFrame(
-                [], f"id_a {id_t}, id_b {id_t}, cos double"
+            return local_frame(
+                corpus.sparkSession, [], f"id_a {id_t}, id_b {id_t}, cos double"
             )
         dim = int(first["d"])
     all_planes = [_hyperplanes(dim, bits, seed + t) for t in range(tables)]
@@ -888,8 +889,8 @@ def cross_embedding_pairs(
             first = new.select(F.size(F.col(vec_col)).alias("d")).first()
             if first is None or first["d"] is None:
                 id_t = _id_type(new, id_col)
-                return new.sparkSession.createDataFrame(
-                    [], f"new_id {id_t}, ref_id {id_t}, cos double"
+                return local_frame(
+                    new.sparkSession, [], f"new_id {id_t}, ref_id {id_t}, cos double"
                 )
             dim = int(first["d"])
         c_side = ref_index.withColumn("_side", F.lit("c"))
@@ -902,8 +903,8 @@ def cross_embedding_pairs(
             first = ref.select(F.size(F.col(vec_col)).alias("d")).first()
             if first is None or first["d"] is None:
                 id_t = _id_type(new, id_col)
-                return new.sparkSession.createDataFrame(
-                    [], f"new_id {id_t}, ref_id {id_t}, cos double"
+                return local_frame(
+                    new.sparkSession, [], f"new_id {id_t}, ref_id {id_t}, cos double"
                 )
             dim = int(first["d"])
         planes = [_hyperplanes(dim, bits, seed + t) for t in range(tables)]

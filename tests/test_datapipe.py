@@ -920,6 +920,83 @@ def test_near_dup_operators_compose_without_running_a_job(spark, documents):
     assert jobs == dict.fromkeys(builds, 0)
 
 
+def test_corpus_near_dup_and_cluster_phases_job_budget(spark, documents, tmp_path):
+    # the corpus pass's near-dup and cluster phases, as the benchmark
+    # runs them over a landed parquet corpus: one persisted doc frame
+    # banded and joined to both sides of each candidate, verified on
+    # the pair's two texts in one Arrow UDF (11 jobs); the union-find
+    # labels landing as a local relation, and no second cache over the
+    # caller's cached pairs (4 jobs)
+    import uuid
+
+    from pipz_spark.datapipe import dedup_clusters, release_caches
+
+    def jobs(fn):
+        sc = spark.sparkContext
+        group = f"phase-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc._jsc.clearJobGroup()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    # every 4th doc gets a near-duplicate (one word appended), so the
+    # pair and cluster plans run on real pairs. One file per core: an
+    # input with fewer splits than cores gets fan_out's rebalance, one
+    # exchange (and job) more, so the count would follow the host
+    variants = documents.where(F.col("doc_id") % 4 == 0).select(
+        (F.col("doc_id") + 1_000_000).alias("doc_id"),
+        F.concat("text", F.lit(" appended")).alias("text"),
+    )
+    documents.select("doc_id", "text").unionByName(variants).repartition(
+        spark.sparkContext.defaultParallelism
+    ).write.parquet(str(tmp_path / "ok"))
+    release_caches()
+    survivors = spark.read.parquet(str(tmp_path / "ok"))
+    pairs = near_dup_pairs(survivors).persist()
+    try:
+        n_pairs, near_dup_jobs = jobs(pairs.count)
+        _, cluster_jobs = jobs(
+            lambda: dedup_clusters(survivors, pairs).write.parquet(str(tmp_path / "clusters"))
+        )
+    finally:
+        pairs.unpersist()
+        release_caches()
+    assert n_pairs >= variants.count()
+    assert (near_dup_jobs, cluster_jobs) == (11, 4)
+
+
+def test_cross_near_dup_rejects_an_index_of_another_signature(spark, tmp_path):
+    # a stored signature index carries its definition in _sig's
+    # metadata; an index without that tag (one saved by an earlier
+    # signature definition, or whose metadata a transform dropped) or
+    # with another tag collides on nothing: it raises instead of
+    # returning no pairs
+    from pipz_spark.datapipe import cross_near_dup_pairs
+    from pipz_spark.datapipe.dedup import minhash_signatures_df
+
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    ref = spark.createDataFrame([(7, base), (8, base + " tail")], "doc_id long, text string")
+    new = spark.createDataFrame([(1, base)], "doc_id long, text string")
+    minhash_signatures_df(ref, num_hashes=120).write.parquet(str(tmp_path / "idx"))
+    idx = spark.read.parquet(str(tmp_path / "idx"))
+    assert cross_near_dup_pairs(new, ref, threshold=0.7, ref_sigs=idx).count() == 2
+    untagged = idx.select("_id", F.col("_sig").alias("_sig", metadata={}))
+    other = idx.select(
+        "_id", F.col("_sig").alias("_sig", metadata={"minhash_definition": "xxhash64/v0"})
+    )
+    wrong_k = minhash_signatures_df(ref, num_hashes=120, shingle_k=4)
+    for bad in (untagged, other, wrong_k):
+        with pytest.raises(ValueError, match="signature tag"):
+            cross_near_dup_pairs(new, ref, threshold=0.7, ref_sigs=bad)
+    # a tagged index of another width is still refused by its width
+    with pytest.raises(ValueError, match="signature width"):
+        cross_near_dup_pairs(
+            new, ref, threshold=0.7, ref_sigs=minhash_signatures_df(ref, num_hashes=64)
+        )
+
+
 def test_near_dup_operators_ignore_repeated_ids(spark, documents):
     # a frame that repeats some rows (same doc_id, same content) must
     # give exactly the pairs of the frame without the repeats: pairs

@@ -754,6 +754,115 @@ def test_flat_map_expands_over_one_scan(spark, documents):
     assert "Union" not in plan
 
 
+def test_near_dup_verify_is_one_python_eval(spark, documents):
+    # the verify scores each candidate on its two texts in ONE Arrow
+    # UDF, where the candidate lands; a deterministic UDF let the
+    # jaccard >= threshold filter be pushed under its projection and
+    # the plan scored every candidate twice. The only other Python
+    # eval is the signature, printed once per scan of the cached doc
+    # frame
+    from pipz_spark.datapipe import cross_near_dup_pairs, near_dup_pairs, release_caches
+
+    odd = F.col("doc_id") % 2 == 1
+    try:
+        for pairs in (
+            near_dup_pairs(documents, threshold=0.7),
+            cross_near_dup_pairs(documents.where(odd), documents.where(~odd), threshold=0.7),
+        ):
+            plan = pairs._jdf.queryExecution().executedPlan().toString()
+            evals = [ln for ln in plan.splitlines() if "ArrowEvalPython" in ln]
+            assert sum("jaccard(" in ln for ln in evals) == 1
+            assert all("jaccard(" in ln or "minhash(" in ln for ln in evals)
+            assert "array_intersect" not in plan
+    finally:
+        release_caches()
+
+
+def _path_to(node, match: str) -> list[str] | None:
+    """One-line strings of the physical plan nodes from ``node`` down
+    to the first node whose line holds ``match`` (AQE stages, reused
+    exchanges and the adaptive root are looked through), or None."""
+    name = node.nodeName()
+    if name == "AdaptiveSparkPlan":
+        return _path_to(node.executedPlan(), match)
+    if name.endswith("QueryStage"):
+        return _path_to(node.plan(), match)
+    line = node.simpleString(50)
+    if match in line:
+        return [line]
+    kids = node.children()
+    if name == "ReusedExchange":
+        kids = [node.child()]
+    else:
+        kids = [kids.apply(i) for i in range(kids.size())]
+    for kid in kids:
+        below = _path_to(kid, match)
+        if below is not None:
+            return [line] + below
+    return None
+
+
+def test_cross_with_index_never_shuffles_the_whole_reference(spark, documents, tmp_path):
+    # a stored index carries no text, so the survivors' reference
+    # texts are joined from the reference corpus. The ref scan must be
+    # semi-join pruned to the survivors' ref ids (broadcast) BEFORE
+    # any exchange: the incremental case is a small batch against a
+    # huge corpus, and shuffling every reference text per batch would
+    # dwarf the batch
+    from pipz_spark.datapipe import cross_near_dup_pairs, minhash_signatures_df, release_caches
+
+    odd = F.col("doc_id") % 2 == 1
+    documents.where(~odd).select("doc_id", "text").write.parquet(str(tmp_path / "corpus_ref"))
+    ref = spark.read.parquet(str(tmp_path / "corpus_ref"))
+    minhash_signatures_df(ref, num_hashes=120).write.parquet(str(tmp_path / "sig_index"))
+    idx = spark.read.parquet(str(tmp_path / "sig_index"))
+    new = documents.where(odd)
+    try:
+        pairs = cross_near_dup_pairs(new, ref, threshold=0.7, ref_sigs=idx)
+        got = sorted(map(tuple, pairs.collect()))
+        assert got and got == sorted(
+            map(tuple, cross_near_dup_pairs(new, ref, threshold=0.7).collect())
+        )
+        # the batch side reads the cached fixture and the index reads
+        # (_id, _sig): the one parquet scan of doc_id is the reference
+        path = _path_to(pairs._jdf.queryExecution().executedPlan(), "FileScan parquet [doc_id")
+        assert path is not None, "the reference text scan is not in the plan"
+        above_scan = list(reversed(path[:-1]))
+        first_exchange = next(
+            (i for i, ln in enumerate(above_scan) if "Exchange" in ln), len(above_scan)
+        )
+        assert any("LeftSemi" in ln for ln in above_scan[:first_exchange]), path
+    finally:
+        release_caches()
+
+
+def test_dedup_clusters_labels_scan_no_python_rdd(spark):
+    # the driver union-find's labels land through Arrow as a local
+    # relation: a frame built from a Python list (or from an EMPTY
+    # pandas frame, which createDataFrame does not send through Arrow)
+    # is a PythonRDD scan that starts Python workers on every
+    # evaluation of a plan that has no Python UDF
+    from pipz_spark.datapipe import dedup_clusters, release_caches
+
+    docs = spark.range(10).select(F.col("id").alias("doc_id"))
+    edges = spark.range(4).select(
+        (F.col("id") * 2).alias("id_a"), (F.col("id") * 2 + 1).alias("id_b")
+    )
+    try:
+        out = dedup_clusters(docs, pairs=edges)
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan
+        assert out.where("is_keeper").count() == 6
+        # no pairs: the empty labels frame is a local relation too, so
+        # the optimizer drops its join outright
+        out = dedup_clusters(docs, pairs=edges.where("id_a < 0"))
+        plan = out._jdf.queryExecution().optimizedPlan().toString()
+        assert "LogicalRDD" not in plan and "Join" not in plan
+        assert out.where("is_keeper").count() == 10
+    finally:
+        release_caches()
+
+
 def _projects(df) -> int:
     return df._jdf.queryExecution().analyzed().toString().count("Project [")
 

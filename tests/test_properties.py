@@ -121,6 +121,50 @@ def test_signature_windows_are_char_shingles(spark_prop, texts, k):
         assert set(got.tolist()) == {int(_shingle_hashes(s, k)[0]) for s in shingles}
 
 
+@settings(max_examples=10, deadline=None, suppress_health_check=list(HealthCheck))
+@given(
+    texts=st.lists(st.text(max_size=24), min_size=2, max_size=8),
+    k=st.integers(min_value=1, max_value=6),
+)
+@example(texts=["", "abc", "abcde", "a\U0001F600b\U0001D518c\U0001F600d", "abcdX", ""], k=5)
+def test_pair_text_jaccard_equals_ngram_jaccard(spark_prop, texts, k):
+    """The near-dup verify (one Arrow UDF over a candidate's two
+    texts) scores every pair exactly as ``ngram_jaccard``'s JVM
+    ``char_shingles`` arrays do, after ``quantize4``, for any Unicode
+    text: non-BMP code points, texts shorter than k, "". Doc 0's id
+    is repeated with a second text, so one batch carries one id with
+    two texts and the UDF's per-text memo must keep them apart."""
+    from pyspark.sql import functions as F
+
+    from pipz_spark.datapipe import ngram_jaccard, release_caches
+    from pipz_spark.datapipe.dedup import _text_jaccard_udf
+    from pipz_spark.datapipe.text import quantize4
+
+    rows = list(enumerate(texts)) + [(0, texts[0] + "\U0001F600")]
+    docs = spark_prop.createDataFrame(rows, "doc_id long, text string")
+    ids = range(len(texts))
+    pairs = spark_prop.createDataFrame(
+        [(a, b) for a in ids for b in ids if a < b], "id_a long, id_b long"
+    )
+    want = sorted(map(tuple, ngram_jaccard(docs, pairs, shingle_k=k).collect()))
+    release_caches()
+
+    def side(s):
+        return docs.select(F.col("doc_id").alias(f"id_{s}"), F.col("text").alias(f"_t{s}"))
+
+    jac = quantize4(_text_jaccard_udf(k)(F.col("_ta"), F.col("_tb")))
+    got = sorted(
+        map(
+            tuple,
+            pairs.join(side("a"), "id_a").join(side("b"), "id_b")
+            .coalesce(1)
+            .select("id_a", "id_b", jac.alias("jaccard"))
+            .collect(),
+        )
+    )
+    assert got == want
+
+
 @settings(max_examples=6, deadline=None, suppress_health_check=list(HealthCheck))
 @given(
     docs=st.lists(

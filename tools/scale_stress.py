@@ -32,7 +32,7 @@ from pipz_spark.datapipe import (
     simhash_near_dup_pairs,
 )
 from pipz_spark.session import get_session
-from pipz_spark.sources.catalog import load_table
+from pipz_spark.sources.catalog import DEFAULT_SF_DIR, load_table
 from pipz_spark import split_ok
 
 REPLICAS = 10
@@ -926,7 +926,19 @@ def main() -> None:
     # cluster far above max_bucket forces the salted big-bucket
     # branch; the evidence to watch is max_task_ms staying bounded
     # (per-task pairs ≤ k·max_bucket by construction, never k²)
-    hot = spark.range(1500).select(
+    hot_docs = d10.unionByName(_viral_bucket(spark))
+    run(spark, "minhash_hot_bucket ",
+        lambda: near_dup_pairs(hot_docs, threshold=0.7).count())
+    run(spark, "simhash_hot_bucket ",
+        lambda: simhash_near_dup_pairs(hot_docs, max_hamming=3).count())
+    spark.stop()
+
+
+def _viral_bucket(spark):
+    """1,500 docs of one boilerplate template with a 5-way tail
+    variant: every pair is a near-dup, so it lands C(1500, 2) =
+    1,124,250 pairs through one hot bucket per band."""
+    return spark.range(1500).select(
         (F.lit(10_000_000) + F.col("id")).alias("doc_id"),
         F.concat(
             F.lit("identical viral boilerplate template text repeated across "
@@ -934,11 +946,32 @@ def main() -> None:
             (F.col("id") % 5).cast("string"),
         ).alias("text"),
     )
-    hot_docs = d10.unionByName(hot)
-    run(spark, "minhash_hot_bucket ",
-        lambda: near_dup_pairs(hot_docs, threshold=0.7).count())
-    run(spark, "simhash_hot_bucket ",
-        lambda: simhash_near_dup_pairs(hot_docs, max_hamming=3).count())
+
+
+def main_hotbucket() -> None:
+    """The viral hot bucket alone: sf0.1 documents plus the 1,500-doc
+    viral bucket through ``near_dup_pairs`` at 0.7, printing the pair
+    count, an order-free checksum of the (id_a, id_b, jaccard) rows
+    (equal on two trees = the same pair set, scores included) and the
+    wall time of the one action. 1,124,506 pairs: the bucket's
+    1,124,250 plus sf0.1's own 256. A fraction of the full 10× run,
+    which builds the 10× corpus first. The documents come from the
+    catalog's default scale directory (``SPARK_GRAFT_SF_DIR``, sf0.1).
+
+        PYTHONPATH=. python tools/scale_stress.py hotbucket
+    """
+    spark = get_session("pipz-scale-stress-hotbucket")
+    spark.sparkContext.setLogLevel("ERROR")
+    docs = load_table(spark, "documents", DEFAULT_SF_DIR)
+    hot_docs = docs.select("doc_id", "text").unionByName(_viral_bucket(spark))
+    t0 = time.time()
+    row = near_dup_pairs(hot_docs, threshold=0.7).agg(
+        F.count(F.lit(1)).alias("n"),
+        F.bit_xor(F.xxhash64("id_a", "id_b", "jaccard")).alias("h"),
+    ).first()
+    print(f"minhash_hot_bucket sf0.1: {row['n']} pairs, checksum {row['h']}, "
+          f"{time.time() - t0:.1f}s wall")
+    release_caches()
     spark.stop()
 
 
@@ -2288,7 +2321,9 @@ def main_kcenter100x() -> None:
 if __name__ == "__main__":
     import sys as _sys
 
-    if "pq100x" in _sys.argv[1:]:
+    if "hotbucket" in _sys.argv[1:]:
+        main_hotbucket()
+    elif "pq100x" in _sys.argv[1:]:
         main_pq100x()
     elif "ann100x" in _sys.argv[1:]:
         main_ann100x()
